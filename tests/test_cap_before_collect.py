@@ -77,3 +77,30 @@ def test_logrank_under_cap_unchanged(spark):
     )
     r = logrank_test(df, "t", "e", "g").collect()[0]
     assert r["n1"] == 2 and r["n2"] == 2
+
+
+def _cached_rdd_ids(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize("op", ["kendall_tau_b", "isotonic_fit"])
+def test_over_limit_raises_before_any_cache_fill(spark, op):
+    """Probe before fill: the distinct-cell/bucket guard runs on the
+    un-persisted aggregate, so an over-limit input raises with no cached
+    RDD added — the oversized table is never filled into the cache."""
+    from weaviate_txtai_spark.cache import cache_scope
+    from weaviate_txtai_spark.operators.isotonic import isotonic_fit
+    from weaviate_txtai_spark.operators.rankstats import kendall_tau_b
+
+    # 50 distinct x (and (x, y) cells) against a limit of 10
+    df = spark.createDataFrame(
+        [(float(i), float(i % 2)) for i in range(50)], "x double, y double"
+    )
+    before = _cached_rdd_ids(spark)
+    with cache_scope():
+        with pytest.raises(ValueError):
+            if op == "kendall_tau_b":
+                kendall_tau_b(df, "x", "y", max_cells=10)
+            else:
+                isotonic_fit(df, "x", "y", max_buckets=10)
+        assert _cached_rdd_ids(spark) - before == set()

@@ -178,20 +178,30 @@ def test_save_load_noop(spark, tmp_path):
 
 
 def test_search_gemm_path_matches_expr_path(spark, tmp_path):
+    """search takes the GEMM path at every query count; at Q=1 and Q=20
+    it returns knn_topk's expression-path answer over the same rows."""
     import numpy as np
+
+    from weaviate_txtai_spark.operators.topk import knn_topk
 
     rng = np.random.default_rng(3)
     vecs = rng.standard_normal((60, 16)).tolist()
     idx = VectorIndex(spark, str(tmp_path / "gemmidx")).create()
     idx.append(vecs)
-    queries = vecs[:20]  # >= 16 -> GEMM path
-    gemm = idx.search(queries, limit=5)
-    # force the expression path on the same queries for comparison
-    expr = [idx.search([q], limit=5)[0] for q in queries]
-    for g, e in zip(gemm, expr):
-        assert [d for d, _ in g] == [d for d, _ in e]
-        for (_, sg), (_, se) in zip(g, e):
-            assert abs(sg - se) < 1e-6
+    for queries in (vecs[:1], vecs[:20]):
+        qdf = spark.createDataFrame(
+            list(enumerate(queries)), "query_id long, query_vector array<float>"
+        )
+        expr: list = [[] for _ in queries]
+        rows = knn_topk(idx.to_df(), qdf, 5).collect()
+        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+            expr[r["query_id"]].append((r["docid"], r["score"]))
+        gemm = idx.search(queries, limit=5)
+        assert len(gemm) == len(queries)
+        for g, e in zip(gemm, expr):
+            assert [d for d, _ in g] == [d for d, _ in e]
+            for (_, sg), (_, se) in zip(g, e):
+                assert abs(sg - se) < 1e-6
 
 
 def test_compact_preserves_data_and_reduces_files(spark, tmp_path):

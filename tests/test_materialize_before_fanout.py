@@ -23,19 +23,25 @@ from weaviate_txtai_spark.operators.seqmine import sequence_pairs
 from weaviate_txtai_spark.operators.stringjoin import edit_distance_join
 
 
-def _all_filled(spark, caches):
-    """Every registered cache is fully materialized (no unfilled
-    partitions) BEFORE any action has run on the returned frame."""
-    infos = {
-        i.name(): (i.numCachedPartitions(), i.numPartitions())
+def _cached(spark):
+    """Cached RDDs now in the session: id -> (name, cached, total)."""
+    return {
+        i.id(): (i.name(), i.numCachedPartitions(), i.numPartitions())
         for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     }
+
+
+def _all_filled(spark, caches, before):
+    """Every cache the operator call added is fully materialized (no
+    unfilled partitions) BEFORE any action has run on the returned
+    frame. Only the delta since ``before`` counts: an RDD another test
+    left behind (e.g. a lazy localCheckpoint, which clearCache does not
+    release) is not this operator's."""
     assert caches, "operator registered no caches"
-    # every cached+filled RDD is complete; and at least one RDD is
-    # cached at all (the InMemoryRelation fill)
-    filled = [(c, t) for c, t in infos.values() if t > 0]
-    assert filled, f"no cached RDDs found: {infos}"
-    for name, (c, t) in infos.items():
+    new = {k: v for k, v in _cached(spark).items() if k not in before}
+    # at least one RDD is cached at all (the InMemoryRelation fill)
+    assert any(t > 0 for _, _, t in new.values()), f"no cached RDDs found: {new}"
+    for name, c, t in new.values():
         assert c == t, f"cache {name} only {c}/{t} partitions filled"
 
 
@@ -45,9 +51,10 @@ def test_also_bought_counts_filled_before_fanout(spark):
         "basket long, item long",
     )
     spark.catalog.clearCache()
+    before = _cached(spark)
     with cache_scope() as caches:
         out = also_bought_topk(df, "basket", "item", 2, min_pair_count=1)
-        _all_filled(spark, caches)           # BEFORE the action
+        _all_filled(spark, caches, before)           # BEFORE the action
         assert out.count() > 0
 
 
@@ -62,9 +69,10 @@ def test_sequence_pairs_frames_filled_before_fanout(spark):
         "user_id long, event_type string, ts timestamp",
     )
     spark.catalog.clearCache()
+    before = _cached(spark)
     with cache_scope() as caches:
         out = sequence_pairs(ev, window_seconds=3600, min_support=1)
-        _all_filled(spark, caches)
+        _all_filled(spark, caches, before)
         assert out.count() > 0
 
 
@@ -74,9 +82,10 @@ def test_edit_distance_base_filled_before_fanout(spark):
         "id long, name string",
     )
     spark.catalog.clearCache()
+    before = _cached(spark)
     with cache_scope() as caches:
         out = edit_distance_join(df, "id", "name", k=1)
-        _all_filled(spark, caches)
+        _all_filled(spark, caches, before)
         assert out.count() >= 1
 
 
@@ -86,7 +95,8 @@ def test_association_rules_frames_filled_before_fanout(spark):
         "basket long, item long",
     )
     spark.catalog.clearCache()
+    before = _cached(spark)
     with cache_scope() as caches:
         out = association_rules(df, "basket", "item", min_pair_count=1)
-        _all_filled(spark, caches)
+        _all_filled(spark, caches, before)
         assert out.count() > 0

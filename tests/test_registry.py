@@ -28,8 +28,9 @@ _EXECUTING = {"streaming_hourly", "streaming_ingest", "streaming_sessions",
 # The r14 re-verification window (VERDICT r13 task 3): the 12 §2
 # anchors, the 18 r13-optimizer-rewritten gates the driver never
 # re-sampled, and 20 r14-changed gates (graph kernel/probe changes,
-# eager shared-frame fills, composed pipelines) — 38 of 50 slots on
-# optimizer-rewritten gates.
+# eager shared-frame fills, composed pipelines) — of which six slots
+# now go to the gates of the Arrow scorers sharing topk.topk_rows /
+# pq.adc_gather and of the probe-before-fill guards.
 _R14_WINDOW = {
     "knn_topk", "knn_batch", "streaming_ingest", "full_scan",
     "docid_lookup", "scan_limit", "vector_delete", "vector_count",
@@ -44,10 +45,9 @@ _R14_WINDOW = {
     "order_scc", "doc_centrality", "dedup_groups", "dedup_survivors",
     "semantic_dedup_survivors", "pretraining_manifest", "curation_run",
     "bm25_topk", "qlm_topk", "dedup_minhash", "dedup_incremental",
-    "basket_rules", "basket_triples", "part_skyline", "token_pmi_pairs",
-    "events_sequence_triples", "dedup_span_removal",
-    "multimodal_byte_dedup", "lineitem_kendall_tau",
-    "source_shard_apportion",
+    "basket_rules", "source_shard_apportion",
+    "knn_batch_gemm", "pq_knn", "ivfpq_knn", "sim_join_ivf",
+    "sim_join_ivfpq", "purchase_isotonic_fit", "lineitem_kendall_tau",
 }
 
 

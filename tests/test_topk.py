@@ -1,11 +1,14 @@
-"""Batch kNN: expression path vs GEMM path agree; ranks deterministic."""
+"""Batch kNN: expression path vs GEMM path agree; ranks deterministic;
+the shared tie-exact top-k step equals a full sort."""
 
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from weaviate_txtai_spark.operators import knn_topk, knn_topk_gemm
-from weaviate_txtai_spark.operators.topk import knn_single
+from weaviate_txtai_spark.operators.topk import knn_single, topk_rows
 from weaviate_txtai_spark.sources import load_table
 
 
@@ -287,3 +290,24 @@ def test_gemm_numpy_int_ids_infer_long(spark):
     assert res.schema["query_id"].dataType == LongType()
     rows = res.collect()
     assert rows[0]["query_id"] == 7 and rows[0]["docid"] == 2
+
+
+@st.composite
+def _keyed_rows(draw):
+    """Small integer keys (dense ties) over distinct ids in any order,
+    plus a k from 1 to n+2 (cuts inside, at and past the row count)."""
+    n = draw(st.integers(1, 40))
+    key = draw(st.lists(st.integers(-3, 3), min_size=n, max_size=n))
+    ids = draw(st.lists(st.integers(-100, 100), min_size=n, max_size=n, unique=True))
+    k = draw(st.integers(1, n + 2))
+    return np.asarray(key, dtype=np.float64), np.asarray(ids), k
+
+
+@settings(max_examples=300, deadline=None)
+@given(_keyed_rows())
+def test_topk_rows_matches_full_sort(rows):
+    """The shared tie-exact top-k step equals the full (key, id) sort,
+    whatever the ties at the k-th key — numpy only, no Spark."""
+    key, ids, k = rows
+    got = topk_rows(key, ids, k)
+    assert got.tolist() == np.lexsort((ids, key))[:k].tolist()

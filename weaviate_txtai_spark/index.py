@@ -64,7 +64,7 @@ from pyspark.sql.types import (
 )
 
 from weaviate_txtai_spark.operators.ids import uuid5_dns
-from weaviate_txtai_spark.operators.topk import knn_topk
+from weaviate_txtai_spark.operators.topk import knn_topk_gemm
 from weaviate_txtai_spark.schema import DEFAULT_SCHEMA, validate_schema
 
 logger = logging.getLogger(__name__)
@@ -128,6 +128,10 @@ class VectorIndex:
         path: str,
         config: dict[str, Any] | None = None,
     ):
+        from weaviate_txtai_spark.ship import ensure_shipped
+
+        # search scores in an Arrow kernel on the Python workers
+        ensure_shipped(spark)
         self.spark = spark
         self.config = config or {}
         schema = self.config.get("weaviate", {}).get("schema") or DEFAULT_SCHEMA
@@ -512,33 +516,16 @@ class VectorIndex:
         """Batch top-k: returns [[(docid, score)], ...] one list per query.
 
         Unlike the reference (drops all but queries[0], weaviate.py:177)
-        every query vector is answered, in one Spark job. Small batches
-        take the JVM-only expression path (no Python workers to spin
-        up); large batches switch to the Arrow GEMM path, where one
-        BLAS matmul replaces Q per-row cosine expressions.
+        every query vector is answered, in one Spark job. Every query
+        count takes the Arrow GEMM path (``knn_topk_gemm``): one BLAS
+        matmul per Arrow batch and the shared tie-exact top-k step, with
+        the (score DESC, docid ASC) order of ``knn_topk``.
         """
-        if len(queries) >= 16:
-            from weaviate_txtai_spark.operators.topk import knn_topk_gemm
-
-            res = knn_topk_gemm(
-                self.to_df(),
-                [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-                limit,
-            ).collect()
-            out: list[list[tuple[int, float]]] = [[] for _ in queries]
-            for row in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
-                out[row["query_id"]].append((row["docid"], row["score"]))
-            return out
-        qdf = self.spark.createDataFrame(
+        res = knn_topk_gemm(
+            self.to_df(),
             [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-            StructType(
-                [
-                    StructField("query_id", LongType(), False),
-                    StructField("query_vector", ArrayType(FloatType(), False), False),
-                ]
-            ),
-        )
-        res = knn_topk(self.to_df(), qdf, limit).collect()
+            limit,
+        ).collect()
         out: list[list[tuple[int, float]]] = [[] for _ in queries]
         for row in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
             out[row["query_id"]].append((row["docid"], row["score"]))

@@ -11,7 +11,7 @@ time), and a query touches nprobe partitions. Partition pruning does the
 work Catalyst already knows how to do; on 100 TB the probed fraction is
 nprobe/nlist of the data, and the scan stays columnar + codegen.
 
-Build: MLlib KMeans on a sample, centroids broadcast, one pass to assign.
+Build: driver-side numpy k-means on a sample, one pass to assign.
 Search: queries × centroids (tiny crossJoin) → top-nprobe cells → equi-join
 on cell id (shuffle only the query fan-out, never the corpus) → exact
 score → window top-k.
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.cache import scoped_persist
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import topk_rows
 
 
 def probe_cells_gemm(
@@ -596,7 +597,6 @@ class IVFIndex:
                 n = np.linalg.norm(M, axis=1)
                 n[n == 0.0] = 1.0
                 M /= n[:, None]
-            kk = min(k, len(ids))
             out_q, out_i, out_s = [], [], []
             chunk = 1024
             qids = qpdf["__qid"].to_numpy()
@@ -604,16 +604,7 @@ class IVFIndex:
                 sims = Q[lo : lo + chunk] @ C.T  # (q, c)
                 for j in range(sims.shape[0]):
                     row = sims[j]
-                    if kk < len(ids):
-                        part = np.argpartition(-row, kk - 1)[:kk]
-                        kth = row[part].min()
-                        # every index scoring >= the kth value: exact
-                        # under boundary ties (argpartition's own tail
-                        # is arbitrary and could cut the wrong tied id)
-                        cand = np.nonzero(row >= kth)[0]
-                    else:
-                        cand = np.arange(len(ids))
-                    order = cand[np.lexsort((ids[cand], -row[cand]))][:kk]
+                    order = topk_rows(-row, ids, k)
                     out_q.append(np.repeat(qids[lo + j], len(order)))
                     out_i.append(ids[order])
                     out_s.append(row[order])

@@ -53,26 +53,28 @@ def isotonic_fit(
     CONTINUOUS x (the kendall/cliffs_delta cardinality-guard
     discipline): a raw-score x makes B ≈ corpus and the quadratic
     explodes — bucket the scores first. The probe is a bounded
-    ``limit(cap+1)`` count on the already-aggregated bucket table,
-    never a corpus scan.
+    ``limit(cap+1)`` count on the aggregated bucket table, run before
+    that table is cached.
     """
-    # eager: the limit-count probe below stops early and would leave
-    # the cache PARTIALLY filled for the B^2 self-join consumers (r14)
-    b = scoped_persist(
+    b = (
         df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
         .groupBy(F.col(x_col).alias("x"))
         .agg(
             F.sum(F.col(y_col).cast("double")).alias("sy"),
             F.count(F.lit(1)).cast("double").alias("n"),
-        ),
-        eager=True,
+        )
     )
+    # probe before fill: the bounded probe runs on the un-persisted
+    # aggregate (a probe on a lazy cache fills it), so an over-limit
+    # input raises without caching the oversized table
     if b.limit(max_buckets + 1).count() > max_buckets:
         raise ValueError(
             f"isotonic_fit: more than {max_buckets} distinct x values — "
             "the B^2 isotonic evaluation needs a bucketed domain; "
             "quantize x first (e.g. functions.sampling.quantile_buckets)"
         )
+    # eager: fill before the B^2 self-join consumers fan out
+    b = scoped_persist(b, eager=True)
     # inclusive prefix sums via a range self-join (B² pairs, B =
     # bucket-domain size); exclusive = inclusive − own bucket
     l, r = b.alias("l"), b.alias("r")

@@ -43,7 +43,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.ann import IVFIndex
-from weaviate_txtai_spark.operators.pq import PQModel, pq_encode, train_pq
+from weaviate_txtai_spark.operators.pq import (
+    PQModel,
+    adc_gather,
+    pq_encode,
+    train_pq,
+)
+from weaviate_txtai_spark.operators.topk import topk_rows
 
 
 @dataclass
@@ -692,18 +698,8 @@ class IVFPQIndex:
                     for s in range(m)
                 ]
                 for j in range(r.shape[0]):
-                    dist = np.zeros(len(ids), dtype=np.float64)
-                    for s in range(m):
-                        dist = dist + luts[s][j][codes[:, s]]
-                    dist = np.round(dist, 6)
-                    t = min(take, len(ids))
-                    if t < len(ids):
-                        part = np.argpartition(dist, t - 1)[:t]
-                        kth = dist[part].max()
-                        cand = np.nonzero(dist <= kth)[0]
-                    else:
-                        cand = np.arange(len(ids))
-                    order = cand[np.lexsort((ids[cand], dist[cand]))][:t]
+                    dist = adc_gather([lut[j] for lut in luts], codes)
+                    order = topk_rows(dist, ids, take)
                     out_q.append(np.repeat(qids[lo + j], len(order)))
                     out_i.append(ids[order])
                     out_d.append(dist[order])
@@ -809,7 +805,6 @@ class IVFPQIndex:
         import numpy as np
         import pandas as pd
 
-        m, k = self.pq.m, self.pq.k
         id_col = self.id_col
         id_ddl = base.schema[id_col].dataType.simpleString()
         qid_ddl = lut_schema["__qid"].dataType.simpleString()
@@ -842,11 +837,8 @@ class IVFPQIndex:
                     sel = np.nonzero(cells == cell)[0]
                     sub, sids = codes[sel], ids[sel]
                     for qid, lut_arr in luts:
-                        dist = np.zeros(len(sids), dtype=np.float64)
-                        for s in range(m):
-                            dist = dist + lut_arr[s][sub[:, s]]
                         out.setdefault(qid, []).append(
-                            (np.round(dist, 6), sids)
+                            (adc_gather(lut_arr, sub), sids)
                         )
                 if not out:
                     continue
@@ -854,14 +846,7 @@ class IVFPQIndex:
                 for qid, parts in out.items():
                     dist = np.concatenate([d for d, _ in parts])
                     pids = np.concatenate([i for _, i in parts])
-                    t = min(take, len(pids))
-                    if t < len(pids):
-                        part = np.argpartition(dist, t - 1)[:t]
-                        kth = dist[part].max()
-                        cand = np.nonzero(dist <= kth)[0]
-                    else:
-                        cand = np.arange(len(pids))
-                    order = cand[np.lexsort((pids[cand], dist[cand]))][:t]
+                    order = topk_rows(dist, pids, take)
                     out_q.append(np.repeat(qid, len(order)))
                     out_i.append(pids[order])
                     out_d.append(dist[order])

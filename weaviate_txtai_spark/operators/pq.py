@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.kmeans import assign_clusters
+from weaviate_txtai_spark.operators.topk import topk_rows
 
 
 @dataclass
@@ -431,6 +432,22 @@ def pq_unpack(
     return df.withColumn(out_col, codes)
 
 
+def adc_gather(lut, codes):
+    """Round-6 ADC distance of every code row: ``lut[s][codes[:, s]]``
+    accumulated from 0.0 over s = 0..m-1, left to right, then rounded —
+    the same float64 operation sequence as :func:`adc_scores`'
+    ``aggregate`` fold, shared by every Arrow ADC kernel. Keep the
+    loop: a vectorized ``.sum(axis=1)`` changes the summation order and
+    can flip 6-dp ties against the oracle. ``lut``: m per-subspace
+    tables of k entries; ``codes``: (rows, m) int codes."""
+    import numpy as np
+
+    dist = np.zeros(len(codes), dtype=np.float64)
+    for s in range(len(lut)):
+        dist = dist + lut[s][codes[:, s]]
+    return np.round(dist, 6)
+
+
 def _adc_scores_gemm(
     codes: DataFrame,
     model: PQModel,
@@ -466,7 +483,6 @@ def _adc_scores_gemm(
     lut = np.asarray(
         model.lut(query, round_decimals=lut_round_decimals), dtype=np.float64
     )  # (m, k)
-    m = model.m
     id_ddl = codes.schema[id_col].dataType.simpleString()
 
     def kernel(batches):
@@ -475,18 +491,8 @@ def _adc_scores_gemm(
                 continue
             mat = np.asarray(list(pdf[code_col]), dtype=np.int64)  # (B, m)
             ids = pdf[id_col].to_numpy()
-            dist = np.zeros(len(ids), dtype=np.float64)
-            for s in range(m):
-                dist = dist + lut[s][mat[:, s]]
-            dist = np.round(dist, 6)
-            t = min(n, len(ids))
-            if t < len(ids):
-                part = np.argpartition(dist, t - 1)[:t]
-                kth = dist[part].max()
-                cand = np.nonzero(dist <= kth)[0]
-            else:
-                cand = np.arange(len(ids))
-            order = cand[np.lexsort((ids[cand], dist[cand]))][:t]
+            dist = adc_gather(lut, mat)
+            order = topk_rows(dist, ids, n)
             yield pd.DataFrame({id_col: ids[order], "adc_dist": dist[order]})
 
     return codes.select(id_col, code_col).mapInPandas(

@@ -1062,7 +1062,9 @@ def kendall_tau_b(
     )
     from weaviate_txtai_spark.cache import scoped_persist
 
-    cells = scoped_persist(cells, eager=True)  # r14: fill before fan-out
+    # probe before fill: the bounded probe runs on the un-persisted
+    # aggregate (a probe on a lazy cache fills it), so an over-limit
+    # input raises without caching the oversized table
     n_cells = cells.limit(int(max_cells) + 1).count()
     if n_cells > max_cells:
         raise ValueError(
@@ -1070,6 +1072,7 @@ def kendall_tau_b(
             f"cell-pair join is quadratic in the value domain; bucket "
             f"or quantize the columns first"
         )
+    cells = scoped_persist(cells, eager=True)  # fill before fan-out
     a = cells.select(
         F.col("__x").alias("xa"), F.col("__y").alias("ya"),
         F.col("__c").alias("ca"),

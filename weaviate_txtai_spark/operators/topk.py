@@ -20,15 +20,20 @@ Physical strategy (designed for 100 TB / 1000 executors):
 - For a single query we use ``orderBy().limit(k)`` which Catalyst plans as
   ``TakeOrderedAndProject`` — per-partition heaps + driver merge, zero
   shuffle.
-- ``knn_topk_gemm`` is the scale path for large query batches: Arrow-batched
-  numpy GEMM over ``mapInPandas`` with per-partition top-k reduction, so the
-  rows crossing the final shuffle are k per (query, partition), never M×N.
+- ``knn_topk_gemm`` is the Arrow path ``VectorIndex.search`` takes for every
+  query count: numpy GEMM per Arrow batch over ``mapInPandas`` with
+  per-partition top-k reduction, so the rows crossing the final shuffle are
+  k per (query, partition), never M×N.
+- ``topk_rows`` is the one tie-exact top-k step every Arrow scorer shares
+  (``knn_topk_gemm``, the IVF cogroup, the PQ/IVF-PQ ADC kernels): one
+  vectorized cut per block, exact under ties at the k-th key.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -105,6 +110,29 @@ def knn_single(
     )
 
 
+def topk_rows(key: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Row indices of the ``k`` smallest ``key`` values, ordered by
+    (key ASC, id ASC) — the one top-k step every Arrow scorer shares.
+
+    A partial sort alone keeps ARBITRARY members of a tied group at the
+    k-th key, so the cut would depend on row order. Instead: partition
+    for the k-th key, widen to every row at or below it (all its ties),
+    lexsort by (key, id), then cut to k — identical to the full sort
+    ``np.lexsort((ids, key))[:k]`` for any tie pattern. Similarity
+    callers pass ``-sims``: IEEE negation is exact, so the selected rows
+    are the (score DESC, id ASC) top-k of the original scores.
+    """
+    t = min(k, len(key))
+    if t <= 0:
+        return np.empty(0, dtype=np.intp)
+    if t < len(key):
+        kth = key[np.argpartition(key, t - 1)[:t]].max()
+        cand = np.flatnonzero(key <= kth)
+    else:
+        cand = np.arange(len(key))
+    return cand[np.lexsort((ids[cand], key[cand]))[:t]]
+
+
 def _infer_query_id_type(qids):
     """Map the first query id's Python/numpy type onto a Spark DataType.
 
@@ -179,8 +207,6 @@ def knn_topk_gemm(
 
     Output: query_id, docid, score, rank — same contract as knn_topk.
     """
-    import numpy as np
-
     if metric not in ("cosine", "l2"):
         raise ValueError(
             f"knn_topk_gemm: unknown metric {metric!r}; use 'cosine' or 'l2'"
@@ -249,42 +275,29 @@ def knn_topk_gemm(
                 # dip a true-zero distance to ~-1e-13 and sqrt would NaN
                 xsq = (mat * mat).sum(axis=1, keepdims=True)
                 d2 = xsq - 2.0 * (mat @ qmat.T) + qaux[None, :]
-                dists = np.sqrt(np.clip(d2, 0.0, None))  # (batch, Q)
+                keys = np.sqrt(np.clip(d2, 0.0, None))  # (batch, Q)
                 if dist_round_decimals is not None:
                     # rank on the rounded key (see docstring) so the
-                    # local tie-widening, the lexsort, and the final
-                    # window all agree with an expr-side round
-                    dists = np.round(dists, dist_round_decimals)
-                sims = -dists  # shared top-k code keeps "larger is better"
+                    # local top-k and the final window agree with an
+                    # expr-side round
+                    keys = np.round(keys, dist_round_decimals)
             else:
                 norms = np.linalg.norm(mat, axis=1, keepdims=True)
                 norms[norms == 0.0] = 1.0
-                sims = (mat / norms) @ qaux.T  # (batch, Q)
+                # negated similarities: topk_rows keeps the smallest
+                # keys, and -(-s) == s bit for bit on the way out
+                keys = -((mat / norms) @ qaux.T)  # (batch, Q)
             ids = pdf[id_col].to_numpy()
-            kk = min(k, sims.shape[0])
-            # Local top-k per query. argpartition alone keeps ARBITRARY
-            # members of a score-tied group at the k boundary, which would
-            # make results differ from knn_topk's deterministic
-            # (score DESC, id ASC) tie-break depending on which path
-            # VectorIndex.search picks. So: partition for the threshold,
-            # widen to ALL rows at-or-above it (ties included), then
-            # lexsort (id ASC within score DESC) before cutting to k —
-            # bit-identical to the expression path for any tie pattern.
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, Q)
             rows = []
-            for j in range(sims.shape[1]):
-                thresh = sims[part[:, j], j].min()
-                cand = np.flatnonzero(sims[:, j] >= thresh)
-                order = np.lexsort((ids[cand], -sims[cand, j]))[:kk]
-                sel = cand[order]
+            for j in range(keys.shape[1]):
+                key = keys[:, j]
+                sel = topk_rows(key, ids, k)
                 rows.append(
                     pd.DataFrame(
                         {
                             "query_id": qids[j],
                             id_col: ids[sel],
-                            # l2 emits the true distance, not the negated
-                            # ranking key the shared top-k code used
-                            "score": -sims[sel, j] if metric == "l2" else sims[sel, j],
+                            "score": key[sel] if metric == "l2" else -key[sel],
                         }
                     )
                 )

@@ -93,9 +93,8 @@ _PRIORITY = [
     "order_chain_components",
     # r14-changed gates beyond that set: the graph local-finish probe +
     # Tarjan kernel (order_scc, CC consumers), the eager shared-frame
-    # fills in bm25/qlm/minhash/semantic-dedup/basket/skyline/pmi/
-    # triples/span-removal/byte-dedup/prefix-filter/resample/dbscan/
-    # kendall paths, and the composed pipelines that inherit them
+    # fills in bm25/qlm/minhash/semantic-dedup/basket paths, and the
+    # composed pipelines that inherit them
     "order_scc",
     "doc_centrality",
     "dedup_groups",
@@ -108,14 +107,17 @@ _PRIORITY = [
     "dedup_minhash",
     "dedup_incremental",
     "basket_rules",
-    "basket_triples",
-    "part_skyline",
-    "token_pmi_pairs",
-    "events_sequence_triples",
-    "dedup_span_removal",
-    "multimodal_byte_dedup",
-    "lineitem_kendall_tau",
     "source_shard_apportion",
+    # the Arrow scorers that share one tie-exact top-k step
+    # (topk.topk_rows) and one ADC gather (pq.adc_gather), and the
+    # cardinality guards that probe before they fill the cache
+    "knn_batch_gemm",
+    "pq_knn",
+    "ivfpq_knn",
+    "sim_join_ivf",
+    "sim_join_ivfpq",
+    "purchase_isotonic_fit",
+    "lineitem_kendall_tau",
 ]
 
 

@@ -88,9 +88,9 @@ def knn_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("knn_batch_gemm", _KNN_BATCH_SQL)
 def knn_batch_gemm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GEMM code path under the SAME oracle as knn_batch:
-    VectorIndex.search silently switches to knn_topk_gemm at >= 16
-    queries, so the Arrow-batched BLAS kernel (incl. its
-    widen-to-ties + lexsort tie-break) must hash-match the expression
+    VectorIndex.search answers every query count with knn_topk_gemm,
+    so the Arrow-batched BLAS kernel (incl. the shared tie-exact
+    top-k step, ``topk.topk_rows``) must hash-match the expression
     path's oracle — previously only the expression path was gated
     (VERDICT r2 item 4)."""
     from weaviate_txtai_spark.operators.topk import knn_topk_gemm
@@ -997,10 +997,10 @@ def ivfpq_knn_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual codes + per-(query, cell) ADC LUTs + exact shortlist
     re-rank. Gated in exactness mode — nprobe == nlist and a shortlist
     covering the corpus — where the composition must equal brute-force
-    L2 top-k REGARDLESS of what the (MLlib, non-SQL-replayable)
-    clustering chose: the ADC stage only proposes candidates and the
-    re-rank orders by true distance. Production nprobe/shortlist recall
-    is pinned in tests/test_ivfpq.py."""
+    L2 top-k REGARDLESS of what the (driver-side numpy k-means,
+    non-SQL-replayable) clustering chose: the ADC stage only proposes
+    candidates and the re-rank orders by true distance. Production
+    nprobe/shortlist recall is pinned in tests/test_ivfpq.py."""
     from weaviate_txtai_spark.operators.ivfpq import IVFPQIndex
 
     emb = _emb(spark, sf_dir)
@@ -1480,12 +1480,13 @@ def tune_search_params_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_search_params, VERDICT r6 item 3a) as a driver gate: tune a
     small IVF-PQ index to recall ≥ 0.9 and return the measured curve
     plus the chosen point flagged. Rows-only BY DESIGN (placed below
-    the sampled window): the recall curve depends on the MLlib
-    clustering and PQ codebooks, which no SQL oracle can replay — the
-    minimality/monotonicity/composition contracts are pinned instead
-    in tests/test_ivfpq.py (test_tune_search_params_joint_minimal) and
-    the curve's internal consistency (chosen point meets target or is
-    the exhaustive corner) is asserted here before returning."""
+    the sampled window): the recall curve depends on the driver-side
+    numpy k-means clustering and PQ codebooks, which no SQL oracle can
+    replay — the minimality/monotonicity/composition contracts are
+    pinned instead in tests/test_ivfpq.py
+    (test_tune_search_params_joint_minimal) and the curve's internal
+    consistency (chosen point meets target or is the exhaustive
+    corner) is asserted here before returning."""
     from weaviate_txtai_spark.operators.ivfpq import (
         IVFPQIndex,
         tune_search_params,
