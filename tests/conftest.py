@@ -1,29 +1,10 @@
-"""Test fixtures + a self-contained parallel runner (r14, VERDICT item 4).
-
-The suite grew past the driver's verify budget (1716 tests, 35-43 min
-serial: per-test cost is Spark job-scheduling latency on tiny data, not
-CPU, so independent test FILES parallelize almost perfectly). There is
-no network access to install pytest-xdist, so ``pytest_cmdline_main``
-below implements the same idea in-tree: when pytest is invoked on the
-WHOLE tests directory (the driver's ``python -m pytest tests/ -x -q``),
-the parent process splits the test files into N size-balanced shards
-and runs one pytest subprocess per shard, each with its own Spark
-session (and its own warehouse dir — see the ``spark`` fixture). Any
-targeted invocation (specific files, ``-k``, ``--collect-only``, …)
-runs exactly as before, as does any shard subprocess, so test semantics
-are unchanged — only the top-level scheduling is new.
-
-Opt out with ``SPARK_GRAFT_TEST_SERIAL=1``; size the pool with
-``SPARK_GRAFT_TEST_WORKERS`` (default: min(8, cpus//4, n_files)).
+"""Test fixtures: one local Spark session per pytest process, and the
+test-data scale directory (``SPARK_GRAFT_TEST_SF_DIR``, default sf0.001).
 """
 
-import glob
 import os
-import re
-import subprocess
 import sys
 import tempfile
-import time
 
 import pytest
 
@@ -33,14 +14,11 @@ from pyspark.sql import SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-_TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
-_SHARD_ENV = "SPARK_GRAFT_TEST_SHARD"
-
 
 @pytest.fixture(scope="session")
 def spark():
-    # per-process warehouse dir: parallel shards must not collide on
-    # ./spark-warehouse when a test saves a catalog table
+    # private warehouse dir: a test that saves a catalog table must not
+    # leave ./spark-warehouse in the tree
     wh = tempfile.mkdtemp(prefix="wts_wh_")
     spark = (
         SparkSession.builder.master("local[4]")
@@ -60,125 +38,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
-
-
-# ---------------------------------------------------------------------------
-# parallel full-suite runner
-# ---------------------------------------------------------------------------
-
-
-def _whole_suite_args(args):
-    """True iff the positional args target the whole tests dir (or
-    nothing, with rootdir == repo root)."""
-    pos = [a for a in args if not a.startswith("-")]
-    if not pos:
-        return True
-    for a in pos:
-        p = os.path.abspath(a.split("::")[0])
-        if p not in (_TESTS_DIR, os.path.dirname(_TESTS_DIR)):
-            return False
-    return True
-
-
-def _shards(files, n):
-    """Size-balanced shards: greedy largest-first onto the lightest
-    shard — file size is a good proxy for test-file wall time here."""
-    sized = sorted(files, key=lambda f: -os.path.getsize(f))
-    shards = [[] for _ in range(n)]
-    loads = [0] * n
-    for f in sized:
-        i = loads.index(min(loads))
-        shards[i].append(f)
-        loads[i] += os.path.getsize(f)
-    return [s for s in shards if s]
-
-
-def pytest_cmdline_main(config):
-    if os.environ.get(_SHARD_ENV) or os.environ.get("SPARK_GRAFT_TEST_SERIAL"):
-        return None  # worker shard / explicit serial: run normally
-    argv = config.invocation_params.args
-    # bail to the normal path for anything that isn't a plain full-suite
-    # run (selection, collection, reporting flags that change semantics)
-    passthrough_ok = {"-q", "--quiet", "-x", "--exitfirst", "-p", "-v"}
-    flags = [a for a in argv if a.startswith("-")]
-    if not _whole_suite_args(argv):
-        return None
-    for fl in flags:
-        base = fl.split("=")[0]
-        if base not in passthrough_ok:
-            return None
-    files = sorted(glob.glob(os.path.join(_TESTS_DIR, "test_*.py")))
-    if len(files) < 4:
-        return None
-    n_workers = int(
-        os.environ.get("SPARK_GRAFT_TEST_WORKERS", 0)
-    ) or max(2, min(8, (os.cpu_count() or 8) // 4, len(files)))
-    exitfirst = any(a in ("-x", "--exitfirst") for a in argv)
-
-    shards = _shards(files, n_workers)
-    t0 = time.time()
-    sys.stderr.write(
-        f"[conftest] parallel run: {len(files)} files in {len(shards)} "
-        f"shards (SPARK_GRAFT_TEST_SERIAL=1 to disable)\n"
-    )
-    procs = []
-    outs = []
-    for i, shard in enumerate(shards):
-        env = dict(os.environ, **{_SHARD_ENV: str(i)})
-        out = tempfile.TemporaryFile(mode="w+")
-        cmd = [sys.executable, "-m", "pytest", "-q"]
-        if exitfirst:
-            cmd.append("-x")
-        cmd += shard
-        procs.append(
-            subprocess.Popen(
-                cmd, stdout=out, stderr=subprocess.STDOUT,
-                cwd=os.path.dirname(_TESTS_DIR), env=env,
-            )
-        )
-        outs.append(out)
-
-    rcs = [None] * len(procs)
-    try:
-        while any(rc is None for rc in rcs):
-            time.sleep(0.5)
-            for i, p in enumerate(procs):
-                if rcs[i] is None:
-                    rcs[i] = p.poll()
-                    # exit code 1 = test failures; stop the world on -x
-                    if rcs[i] is not None and rcs[i] != 0 and exitfirst:
-                        for q in procs:
-                            if q.poll() is None:
-                                q.terminate()
-    except KeyboardInterrupt:
-        for q in procs:
-            if q.poll() is None:
-                q.terminate()
-        raise
-
-    # merge worker outputs: progress lines stream poorly when parallel,
-    # so re-emit each worker's full (quiet) output in order — failures
-    # and the per-worker summary lines stay intact and greppable
-    tally = {"passed": 0, "failed": 0, "skipped": 0, "error": 0,
-             "errors": 0, "deselected": 0, "xfailed": 0, "xpassed": 0}
-    for i, out in enumerate(outs):
-        out.seek(0)
-        text = out.read()
-        sys.stdout.write(text)
-        for num, kind in re.findall(r"(\d+) (\w+)", text.split("\n")[-2] if
-                                    text.strip() else ""):
-            if kind in tally:
-                tally[kind] += int(num)
-        out.close()
-    dur = time.time() - t0
-    summary = ", ".join(f"{v} {k}" for k, v in tally.items() if v)
-    worst = max((rc or 0) for rc in rcs)
-    if any(rc is None for rc in rcs):
-        worst = worst or 2
-    sys.stdout.write(
-        f"\n=== parallel total: {summary or 'no summary parsed'} "
-        f"in {dur:.1f}s across {len(shards)} shards "
-        f"(worst shard rc={worst}) ===\n"
-    )
-    sys.stdout.flush()
-    return worst

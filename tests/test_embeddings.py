@@ -211,8 +211,8 @@ def test_heterogeneous_metadata(spark):
 
 
 def test_many_mutations_stay_correct(spark):
-    # 40 mutations cross the lineage-truncation boundary twice; state
-    # must stay exact throughout
+    # 40 mutations, each checkpointed from its predecessor; state must
+    # stay exact throughout
     e = Embeddings(spark)
     e.index([(i, f"base document {i}", None) for i in range(10)])
     for i in range(30):
@@ -223,6 +223,35 @@ def test_many_mutations_stay_correct(spark):
     assert e.search("updated doc number 29", 1)[0][0] == "u29"
     ids = {r["id"] for r in e._df.select("id").collect()}
     assert "u0" not in ids and "u29" in ids and "5" in ids
+
+
+def test_search_after_writes_costs_a_search_after_none(spark):
+    """The write rule: each write fills its own frame, so a search
+    after k writes runs the same number of Spark jobs as a search
+    after none — it never replays the write history."""
+    sc = spark.sparkContext
+
+    def search_jobs(e, tag):
+        sc.setJobGroup(tag, "embeddings write rule")
+        try:
+            e.search("base document 3", 3)
+        finally:
+            sc.setJobGroup("", "")
+        # job-start events reach the status tracker through the async
+        # listener bus; drain it before counting
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    e = Embeddings(spark)
+    e.index([(i, f"base document {i}", None) for i in range(10)])
+    fresh = search_jobs(e, "write-rule-0")
+    assert fresh >= 1
+    for k in range(1, 9):
+        if k % 2:
+            e.upsert([(f"u{k}", f"updated document {k}", None)])
+        else:
+            e.delete([str(k)])
+        assert search_jobs(e, f"write-rule-{k}") == fresh, k
 
 
 def test_upsert_without_metadata_into_metadata_index(spark):

@@ -1,86 +1,6 @@
-"""txtai SQL-surface parity tests, mirroring the reference notebook flow
-(examples/01_simple.ipynb): index text corpus -> similar() SQL with
-metadata predicates -> aggregates -> order by score limit."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from weaviate_txtai_spark.sql import TxtaiSQL, attach_scores
-
-# The reference's 6-sentence news corpus shape (FIXTURES.md A1) —
-# paraphrased fixtures with the same lexical-overlap structure.
-CORPUS = [
-    (0, "beavers build a giant dam to protect the wetland habitat"),
-    (1, "maine man wins lottery jackpot worth millions of dollars"),
-    (2, "make huge profits without work earn up to eight thousand a month"),
-    (3, "the National Park Service warns against hiking danger and sacrificing slower friends to bears"),
-    (4, "rescued dog in canada beats the odds and feels good again"),
-    (5, "stock futures fall after the federal reserve rally fades"),
-]
-
-
-@pytest.fixture(scope="module")
-def engine(spark):
-    docs = spark.createDataFrame(CORPUS, ["docid", "text"]).withColumn(
-        "length", F.length("text")
-    )
-    eng = TxtaiSQL(spark)
-    eng.index(docs)
-    return eng
-
-
-def test_search_lexical_relevance(engine):
-    # "vixen"-style relevance triple: query overlaps one doc's tokens
-    top = engine.search("hiking danger bears", 1)[0]
-    assert top[0] == 3
-    top = engine.search("stock futures reserve", 1)[0]
-    assert top[0] == 5
-    top = engine.search("lottery jackpot", 1)[0]
-    assert top[0] == 1
-
-
-def test_similar_sql_with_metadata_predicate(engine):
-    # notebook cell 26: select text, score where similar(q) and length >= 40
-    res = engine.sql(
-        "select docid, text, score from txtai "
-        "where score >= 0.1 and length >= 40 "
-        "order by score desc limit 2",
-        similar_text="hiking danger bears",
-    ).collect()
-    assert res[0]["docid"] == 3
-    assert all(r["score"] >= 0.1 and len(r["text"]) >= 40 for r in res)
-
-
-def test_aggregate_sql(engine):
-    # notebook cell 27: count/min/max/sum over metadata
-    r = engine.sql(
-        "select count(*) as cnt, min(length) as mn, max(length) as mx, "
-        "sum(length) as sm from txtai"
-    ).collect()[0]
-    assert r["cnt"] == 6
-    assert r["mn"] == min(len(t) for _, t in CORPUS)
-    assert r["mx"] == max(len(t) for _, t in CORPUS)
-    assert r["sm"] == sum(len(t) for _, t in CORPUS)
-
-
-def test_order_by_score_asc_limit(engine):
-    # notebook cell 29 shape: order by score asc limit 1 -> least similar
-    res = engine.sql(
-        "select docid, score from txtai order by score asc limit 1",
-        similar_text="hiking danger bears",
-    ).collect()
-    assert len(res) == 1
-    assert res[0]["docid"] != 3
-
-
-def test_attach_scores_view(spark, engine):
-    scored = attach_scores(
-        engine._indexed, engine.encoder.encode("lottery jackpot"), view="txtai2"
-    )
-    via_view = spark.sql(
-        "select docid from txtai2 order by score desc limit 1"
-    ).collect()[0]["docid"]
-    assert via_view == 1
+"""SQL vector functions registered for ad hoc ``spark.sql`` text. The
+txtai SQL dialect (similar(), metadata predicates, aggregates, order by
+score) is tested through ``Embeddings`` in test_embeddings.py."""
 
 
 def test_registered_sql_vector_functions(spark, sf_dir):

@@ -3,14 +3,19 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at sf0.01, compares row count, column names, and order-insensitive values
 (rows sorted by all columns, floats compared exactly after the in-query
-rounding). Usage: python tools/check_oracle.py [name ...]
+rounding). Spark runs on local[$SPARK_GRAFT_CPUS] (default: all cores);
+DuckDB is bounded to DUCKDB_THREADS threads and DUCKDB_MEMORY, spilling
+to a temporary directory outside the tree that is removed at exit.
+Usage: python tools/check_oracle.py [name ...]
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -18,6 +23,11 @@ import duckdb
 from pyspark.sql import SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+# the same bound perfbench/oracle.py puts on DuckDB: an unbounded
+# in-process DuckDB grew past the box's memory on the sf0.1 oracles
+DUCKDB_THREADS = 2
+DUCKDB_MEMORY = "4GB"
 
 
 def norm(v):
@@ -40,14 +50,31 @@ def main():
     only = set(sys.argv[1:])
 
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
+        SparkSession.builder.master(f"local[{CPUS}]")
+        .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
         .getOrCreate()
     )
+    spill = tempfile.mkdtemp(prefix="check-oracle-")
+    try:
+        failed = run(spark, qs, oracles, only, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    print()
+    if failed:
+        print(f"{len(failed)} FAILED: {failed}")
+        sys.exit(1)
+    print("all green")
+    spark.stop()
+
+
+def run(spark, qs, oracles, only, spill) -> list:
     con = duckdb.connect()
+    con.execute(f"SET threads={DUCKDB_THREADS}")
+    con.execute(f"SET memory_limit='{DUCKDB_MEMORY}'")
+    con.execute(f"SET temp_directory='{os.path.join(spill, 'spill')}'")
     for t in [
         "region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings",
@@ -131,13 +158,7 @@ def main():
             print(f"PASS {name} ({len(srows)} rows)")
         else:
             failed.append(name)
-
-    print()
-    if failed:
-        print(f"{len(failed)} FAILED: {failed}")
-        sys.exit(1)
-    print("all green")
-    spark.stop()
+    return failed
 
 
 if __name__ == "__main__":

@@ -20,13 +20,19 @@ Spark-first design decisions:
   through two systems (txtai SQLite + Weaviate) collapses into column
   projection (SURVEY §1.1).
 - docids are **dense** from the running offset, matching the reference's
-  counter (reference weaviate_txtai/ann/weaviate.py:67,143,149), and
-  assigned by the parallel two-pass scheme in ``operators/ids`` — no
-  global-order window (single-task), and never raw
-  ``monotonically_increasing_id`` — it's non-dense by design.
-- mutations are **set-oriented**: delete/upsert are anti-join + union,
-  one shuffle for any number of ids, instead of the reference's N+1
-  HTTP round-trips (weaviate.py:167-173, TODO at :170-171).
+  counter (reference weaviate_txtai/ann/weaviate.py:67,143,149). Every
+  batch arrives as a driver-side list, so the driver numbers its rows
+  ``offset + i`` while it builds them — no Spark job, no window.
+- mutations are **set-oriented**: delete/upsert are a broadcast
+  anti-join (+ union), one pass for any number of ids, instead of the
+  reference's N+1 HTTP round-trips (weaviate.py:167-173, TODO at
+  :170-171).
+- **one write rule**: ``index``, ``upsert``, ``delete`` and ``load`` all
+  hand their new frame to ``_replace``, which checkpoints it eagerly
+  (``localCheckpoint``) from the predecessor's checkpoint blocks, and
+  leaves those blocks to Spark's ContextCleaner. Each write therefore
+  pays its own fill job, and a read after any number of writes costs
+  what a read after none costs: it never replays the write history.
 - ``similar('…')`` inside SQL text is rewritten into a score-column
   attachment on the ``txtai`` view; every other SQL feature (metadata
   predicates, aggregates, ORDER BY score, LIMIT) is plain Spark SQL.
@@ -111,10 +117,9 @@ class Embeddings:
         self.backend = str(self.config.get("backend", "exact"))
         if self.backend not in ("exact", "ivf", "ivfpq"):
             raise ValueError(f"Embeddings: unknown backend {self.backend!r}")
-        self._ann = None          # cached IVFIndex
+        self._ann = None          # cached IVF or IVF-PQ index
         self._ann_mutations = -1  # mutation counter it was built at
         self._df: DataFrame | None = None
-        self._meta_cols: list[str] = []
         # reference parity: running offset so docids never collide across
         # appends (weaviate.py:67,149; asserted tests/ann/test_weaviate.py:141)
         self.offset = 0
@@ -159,66 +164,69 @@ class Embeddings:
             if all_null
             else rows
         )
-        df = self.spark.createDataFrame([Row(**r) for r in infer_rows])
+        # dense docids are numbered here, on the driver, like
+        # VectorIndex.append's list path: the rows are already a list
+        df = self.spark.createDataFrame(
+            [Row(**{**r, "docid": start + i}) for i, r in enumerate(infer_rows)]
+        )
         for k in all_null:
             df = df.withColumn(k, F.lit(None).cast("string"))
-        # dense docids via the parallel two-pass scheme (operators/ids) —
-        # no global-order window, so ingest stays parallel at any batch
-        # size (SURVEY §7 hard-parts list).
-        from weaviate_txtai_spark.operators.ids import with_dense_ids
-
-        df, _ = with_dense_ids(df, start=start, id_col="docid")
         return self.encoder.encode_df(df, text_col="text")
+
+    def _replace(self, df: DataFrame) -> None:
+        """The one place ``self._df`` is assigned — every write ends here.
+
+        The eager ``localCheckpoint`` fills the new frame in one job that
+        reads the predecessor's checkpoint blocks, and it cuts the
+        lineage, so the next read scans the new blocks and never replays
+        the write history. The predecessor needs no ``unpersist()``: a
+        checkpointed frame is not in Spark's cache manager, so the call
+        would do nothing. Its blocks go to Spark's ContextCleaner once
+        nothing references them, so a frame or ``txtai`` view still
+        derived from the old corpus keeps working. The ``_mutations``
+        bump marks any cached IVF/IVF-PQ index stale."""
+        self._df = df.localCheckpoint(eager=True)
+        self._mutations += 1
 
     def index(self, documents: Iterable) -> None:
         """Drop any existing data and ingest (reference `index` ==
-        drop-and-recreate, weaviate.py:112-135)."""
+        drop-and-recreate, weaviate.py:112-135). Runs the encode job
+        eagerly, before returning (see ``_replace``)."""
         rows = self._to_rows(documents)
-        self.offset = 0
-        # release the previous corpus cache like upsert/delete do — a
-        # reindex loop otherwise accumulates orphaned cached frames in
-        # executor storage until eviction pressure hits everything else
-        if self._df is not None:
-            self._df.unpersist()
-        self._df = self._encode_df(rows, 0).cache()
-        self._mutations += 1  # invalidates the cached ANN index
+        self._replace(self._encode_df(rows, 0))
         self.offset = len(rows)
-        self._meta_cols = [
-            c for c in self._df.columns if c not in ("id", "docid", "vector")
-        ]
 
     def upsert(self, documents: Iterable) -> None:
-        """Replace rows whose id matches; append the rest. One anti-join +
-        union — the set-oriented form of txtai's delete-then-append loop
-        (reference tests/ann/test_weaviate.py:254-317)."""
+        """Replace rows whose id matches; append the rest. One broadcast
+        anti-join + union — the set-oriented form of txtai's
+        delete-then-append loop (reference
+        tests/ann/test_weaviate.py:254-317). Runs its fill job eagerly,
+        before returning (see ``_replace``)."""
         if self._df is None:
             return self.index(documents)
         rows = self._to_rows(documents)
         fresh = self._encode_df(rows, self.offset)
         self.offset += len(rows)
-        kept = self._df.join(fresh.select("id"), "id", "left_anti")
+        kept = self._df.join(F.broadcast(fresh.select("id")), "id", "left_anti")
         # conform the batch to the indexed schema: metadata columns the
         # new documents don't carry become NULL (novel columns would need
         # a reindex — same rule as any declared-schema store, SURVEY §1.2)
         for c in kept.columns:
             if c not in fresh.columns:
                 fresh = fresh.withColumn(c, F.lit(None))
-        old = self._df
-        self._df = kept.unionByName(
-            fresh.select(kept.columns), allowMissingColumns=False
-        ).cache()
-        old.unpersist()
-        self._truncate_lineage()
+        self._replace(kept.unionByName(fresh.select(kept.columns)))
 
     def delete(self, ids: Sequence) -> list:
-        """Anti-join delete by user id — one shuffle for any number of
-        ids (vs the reference's two HTTP round-trips per id). Returns
-        the ids actually deleted (txtai's Embeddings.delete contract:
-        absent ids are ignored, present ones are reported back)."""
+        """Broadcast anti-join delete by user id — one pass for any
+        number of ids (vs the reference's two HTTP round-trips per id).
+        Returns the ids actually deleted (txtai's Embeddings.delete
+        contract: absent ids are ignored, present ones are reported
+        back). Runs its fill job eagerly, before returning (see
+        ``_replace``)."""
         if self._df is None:
             return []
-        ids_df = self.spark.createDataFrame(
-            [(str(i),) for i in ids], schema="id string"
+        ids_df = F.broadcast(
+            self.spark.createDataFrame([(str(i),) for i in ids], schema="id string")
         )
         deleted = [
             r["id"]
@@ -226,28 +234,8 @@ class Embeddings:
             .select("id")
             .collect()
         ]
-        old = self._df
-        self._df = old.join(ids_df, "id", "left_anti").cache()
-        old.unpersist()
-        self._truncate_lineage()
+        self._replace(self._df.join(ids_df, "id", "left_anti"))
         return deleted
-
-    def _truncate_lineage(self) -> None:
-        """Every N mutations, cut the plan lineage with an eager
-        localCheckpoint. Each upsert/delete stacks an anti-join + union
-        on the previous plan; after hundreds of mutations the lineage
-        alone costs analysis time and a failure would recompute the
-        whole chain. Checkpointing materializes the current state and
-        restarts the chain from it — the micro-scale analog of
-        compaction in a Delta/Iceberg table."""
-        self._mutations += 1
-        if self._mutations % 8 == 0 and self._df is not None:
-            cp = self._df.localCheckpoint(eager=True)
-            # the pre-checkpoint cache entry is orphaned once cp takes
-            # over (reads come from the checkpointed blocks) — release
-            # it instead of leaking one entry per 8 mutations
-            self._df.unpersist()
-            self._df = cp
 
     # ------------------------------------------------------------- query
 
@@ -279,37 +267,34 @@ class Embeddings:
     # -------------------------------------------------------- ANN backend
 
     def _ann_index(self):
-        """Build (or reuse) the IVF index over the current frame.
-        Staleness is tracked by the monotonic ``_mutations`` counter
-        (bumped by index/upsert/delete), NOT by ``id(self._df)``:
-        after a mutation the old frame is unpersisted and GC'd, so
-        CPython can hand the NEW frame the SAME id() and a search
-        would silently serve the stale pre-mutation index (ADVICE
-        r4)."""
-        from weaviate_txtai_spark.operators.ann import IVFIndex
-
-        if self._ann is not None and self._ann_mutations == self._mutations:
-            return self._ann
-        cfg = dict(self.config.get("ivf") or {})
-        n = self._df.count()
-        nlist = int(cfg.get("nlist", max(4, n // 128)))
-        nlist = max(1, min(nlist, n))
-        self._ann = IVFIndex.build(
-            self._df, nlist=nlist, id_col="docid", vector_col="vector"
-        )
-        self._ann_mutations = self._mutations
+        """Build (or reuse) the IVF or IVF-PQ index over the current
+        frame. Staleness is tracked by the monotonic ``_mutations``
+        counter (bumped by ``_replace``), NOT by ``id(self._df)``:
+        after a write the old frame is released and GC'd, so CPython
+        can hand the NEW frame the SAME id() and a search would
+        silently serve the stale pre-write index (ADVICE r4)."""
+        if self._ann is None or self._ann_mutations != self._mutations:
+            build = self._build_ivfpq if self.backend == "ivfpq" else self._build_ivf
+            self._ann = build(self._df.count())
+            self._ann_mutations = self._mutations
         return self._ann
 
-    def _ivfpq_index(self):
-        """Build (or reuse) the IVF-PQ index — same mutation-counter
-        staleness contract as ``_ann_index``. Codebook k and nlist are
-        clamped to the corpus so tiny indexes stay trainable."""
+    def _build_ivf(self, n: int):
+        from weaviate_txtai_spark.operators.ann import IVFIndex
+
+        cfg = dict(self.config.get("ivf") or {})
+        nlist = int(cfg.get("nlist", max(4, n // 128)))
+        nlist = max(1, min(nlist, n))
+        return IVFIndex.build(
+            self._df, nlist=nlist, id_col="docid", vector_col="vector"
+        )
+
+    def _build_ivfpq(self, n: int):
+        """Codebook k and nlist are clamped to the corpus so tiny
+        indexes stay trainable."""
         from weaviate_txtai_spark.operators.ivfpq import IVFPQIndex
 
-        if self._ann is not None and self._ann_mutations == self._mutations:
-            return self._ann
         cfg = dict(self.config.get("ivfpq") or {})
-        n = self._df.count()
         # the ivfpq score contract is the unit-vector identity
         # cos = 1 − d²/2; a pluggable encoder that does NOT L2-normalize
         # would silently get wrong scores (exact/ivf backends rank true
@@ -340,7 +325,7 @@ class Embeddings:
         nlist = max(1, min(int(cfg.get("nlist", max(4, n // 256))), n))
         m = int(cfg.get("m", 8))
         k = max(2, min(int(cfg.get("k", 16)), n))
-        self._ann = IVFPQIndex.build(
+        return IVFPQIndex.build(
             self._df,
             nlist=nlist,
             m=m,
@@ -349,58 +334,40 @@ class Embeddings:
             id_col="docid",
             vector_col="vector",
         )
-        self._ann_mutations = self._mutations
-        return self._ann
-
-    def _ivfpq_search(self, qrows: list[tuple[int, list[float]]], limit: int):
-        """IVF-PQ search for search/batchsearch: ADC shortlist + exact
-        L2 re-rank, then the L2→cosine identity for unit vectors
-        (encoders L2-normalize, so cos = 1 − d²/2 EXACTLY) converts the
-        re-ranked distance into the facade's score contract."""
-        idx = self._ivfpq_index()
-        cfg = dict(self.config.get("ivfpq") or {})
-        # `or`-defaults: an explicit None in the config dict must fall
-        # back like a missing key, not crash in int(None)
-        hits = idx.search(
-            qrows,
-            limit + 8,
-            nprobe=int(cfg.get("nprobe") or 4),
-            shortlist=int(cfg.get("shortlist") or 8),
-        ).select(
-            F.col("query_id").cast("int").alias("qid"),
-            "docid",
-            F.round(F.lit(1.0) - F.col("dist") / F.lit(2.0), 6).alias("score"),
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.desc("score"), F.asc("docid")
-        )
-        hits = (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= limit)
-        )
-        cols = ["docid", "id", "text"] if self.content else ["docid", "id"]
-        return (
-            self._df.select(*cols)
-            .join(F.broadcast(hits), "docid")
-            .orderBy("qid", "rank")
-        )
 
     def _ann_search(self, qrows: list[tuple[int, list[float]]], limit: int):
-        """Shared ANN search for search/batchsearch: probe, score, join
-        the hits back to their stored rows (broadcast: Q×limit ids)."""
-        if self.backend == "ivfpq":
-            return self._ivfpq_search(qrows, limit)
+        """Shared ANN search for search/batchsearch: probe with a small
+        slack, re-rank on the ROUNDED score with the docid tie-break —
+        the exact path's ordering contract (the backends rank raw
+        doubles, so a pair tied at 6 dp could otherwise resolve to a
+        different, valid but non-canonical, member at the cut line) —
+        then join the hits back to their stored rows (broadcast:
+        Q×limit ids)."""
         idx = self._ann_index()
-        nprobe = int(dict(self.config.get("ivf") or {}).get("nprobe", 4))
-        qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
-        # fetch a small slack then re-rank on the ROUNDED score with the
-        # docid tie-break — the exact path's ordering contract. IVF ranks
-        # raw doubles, so a pair tied at 6 dp could otherwise resolve to
-        # a different (valid but non-canonical) member at the cut line.
-        hits = idx.search(
-            qdf, limit + 8, nprobe=nprobe,
-            query_id_col="qid", query_vector_col="qv",
-        ).select("qid", "docid", F.round("score", 6).alias("score"))
+        if self.backend == "ivfpq":
+            # ADC shortlist + exact L2 re-rank, then the L2→cosine
+            # identity for unit vectors (encoders L2-normalize, so
+            # cos = 1 − d²/2 EXACTLY) gives the facade's score contract.
+            # `or`-defaults: an explicit None in the config dict must
+            # fall back like a missing key, not crash in int(None)
+            cfg = dict(self.config.get("ivfpq") or {})
+            hits = idx.search(
+                qrows,
+                limit + 8,
+                nprobe=int(cfg.get("nprobe") or 4),
+                shortlist=int(cfg.get("shortlist") or 8),
+            ).select(
+                F.col("query_id").cast("int").alias("qid"),
+                "docid",
+                F.round(F.lit(1.0) - F.col("dist") / F.lit(2.0), 6).alias("score"),
+            )
+        else:
+            nprobe = int(dict(self.config.get("ivf") or {}).get("nprobe", 4))
+            qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
+            hits = idx.search(
+                qdf, limit + 8, nprobe=nprobe,
+                query_id_col="qid", query_vector_col="qv",
+            ).select("qid", "docid", F.round("score", 6).alias("score"))
         w = Window.partitionBy("qid").orderBy(
             F.desc("score"), F.asc("docid")
         )
@@ -414,6 +381,14 @@ class Embeddings:
             .join(F.broadcast(hits), "docid")
             .orderBy("qid", "rank")
         )
+
+    def _hit(self, r) -> Any:
+        """One search result in the facade's shape: ``(id, score)``, or
+        in content mode a row dict with the stored text, txtai style:
+        search(...)[0]["text"] (notebook cell 22)."""
+        if self.content:
+            return {"id": r["id"], "text": r["text"], "score": r["score"]}
+        return (r["id"], r["score"])
 
     def search(self, query: str, limit: int = 3) -> list:
         """Text query → [(id, score)] top-limit by cosine; SQL query
@@ -428,27 +403,17 @@ class Embeddings:
             # before the filter would silently under-fill the limit
             return self._search_sql(query, limit)
         if self.backend in ("ivf", "ivfpq"):
-            rows = self._ann_search(
+            top = self._ann_search(
                 [(0, [float(x) for x in self.encoder.encode(query)])], limit
-            ).collect()
-            if self.content:
-                return [
-                    {"id": r["id"], "text": r["text"], "score": r["score"]}
-                    for r in rows
-                ]
-            return [(r["id"], r["score"]) for r in rows]
-        top = (
-            self._scored(query)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(limit)
-        )
-        if self.content:
-            # content mode returns row dicts with the stored text, txtai
-            # style: search(...)[0]["text"] (notebook cell 22)
-            out = top.select("id", "text", "score").collect()
-            return [r.asDict() for r in out]
-        out = top.select("id", "score").collect()
-        return [(r["id"], r["score"]) for r in out]
+            )
+        else:
+            top = (
+                self._scored(query)
+                .orderBy(F.desc("score"), F.asc("docid"))
+                .limit(limit)
+            )
+        cols = ["id", "text", "score"] if self.content else ["id", "score"]
+        return [self._hit(r) for r in top.select(*cols).collect()]
 
     def _search_sql(self, query: str, limit: int) -> list[dict]:
         rewritten, similar_text = rewrite_similar_sql(query)
@@ -515,6 +480,8 @@ class Embeddings:
         path: str,
         encoder: HashingEncoder | None = None,
     ) -> "Embeddings":
+        """Re-attach to an index ``save`` wrote. Reads the stored data
+        eagerly, before returning (see ``_replace``)."""
         with open(os.path.join(path, "embeddings_meta.json")) as f:
             meta = json.load(f)
         self = cls(
@@ -522,12 +489,8 @@ class Embeddings:
             encoder or HashingEncoder(meta["encoder_dim"]),
             config=meta.get("config") or None,
         )
-        self._df = spark.read.parquet(os.path.join(path, "data")).cache()
-        self._mutations += 1  # fresh frame: any cached ANN is stale
+        self._replace(spark.read.parquet(os.path.join(path, "data")))
         self.offset = meta["offset"]
-        self._meta_cols = [
-            c for c in self._df.columns if c not in ("id", "docid", "vector")
-        ]
         return self
 
     def batchsearch(self, queries: Sequence[str], limit: int = 3) -> list:
@@ -544,33 +507,22 @@ class Embeddings:
             for i, q in enumerate(queries)
         ]
         if self.backend in ("ivf", "ivfpq"):
-            out: list[list] = [[] for _ in queries]
-            for r in self._ann_search(qrows, limit).collect():
-                if self.content:
-                    out[r["qid"]].append(
-                        {"id": r["id"], "text": r["text"], "score": r["score"]}
-                    )
-                else:
-                    out[r["qid"]].append((r["id"], r["score"]))
-            return out
-        qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        top = (
-            self._df.crossJoin(F.broadcast(qdf))
-            .withColumn("score", F.round(cosine_sim("vector", "qv"), 6))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= limit)
-        )
-        cols = ["qid", "id", "text", "score"] if self.content else ["qid", "id", "score"]
-        rows = top.select(*cols).orderBy("qid", "__rn").collect()
+            top = self._ann_search(qrows, limit)
+        else:
+            qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
+            w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+            cols = ["qid", "id", "text", "score"] if self.content else ["qid", "id", "score"]
+            top = (
+                self._df.crossJoin(F.broadcast(qdf))
+                .withColumn("score", F.round(cosine_sim("vector", "qv"), 6))
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= limit)
+                .select(*cols)
+                .orderBy("qid", "__rn")
+            )
         out: list[list] = [[] for _ in queries]
-        for r in rows:
-            if self.content:
-                d = r.asDict()
-                d.pop("qid")
-                out[r["qid"]].append(d)
-            else:
-                out[r["qid"]].append((r["id"], r["score"]))
+        for r in top.collect():
+            out[r["qid"]].append(self._hit(r))
         return out
 
     def batchsimilarity(

@@ -1,31 +1,17 @@
-"""txtai SQL surface in Spark SQL (SURVEY §2.3 T1–T6, M2).
+"""The vector kernel as SQL functions (SURVEY §2.3 T1–T6, M2).
 
-The reference's SQL dialect runs in txtai's engine with ``similar('…')``
-fanning out to the ANN backend:
-
-    select text, score from txtai
-    where similar('hiking danger') and score >= 0.0 and length >= 40
-    (examples/01_simple.ipynb cells 25-27, 29)
-
-Spark-natively, ``similar()`` is a *score column attachment*: compute
-cosine of every stored vector against the query vector, register the
-scored relation as the ``txtai`` view, and every other SQL feature
-(metadata predicates, aggregates, order by score, limit) is plain
-Spark SQL over it. Catalyst pushes the metadata predicates into the
-parquet scan underneath the score projection.
+The txtai SQL dialect itself — ``similar('…')`` as a score column on
+the ``txtai`` view, with every other SQL feature plain Spark SQL over
+it — lives in ``Embeddings.search`` (embeddings.py). This module only
+registers the vector family for ad hoc ``spark.sql`` text.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from weaviate_txtai_spark.functions.encoders import HashingEncoder
-from weaviate_txtai_spark.functions.vector import cosine_sim
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -70,73 +56,3 @@ def register_sql_functions(spark: SparkSession) -> None:
     spark.udf.register("cosine_sim", cosine_sim_udf)
     spark.udf.register("dot_product", dot_udf)
     spark.udf.register("l2_dist", l2_dist_udf)
-
-
-def attach_scores(
-    df: DataFrame,
-    query_vector: Sequence[float],
-    *,
-    vector_col: str = "vector",
-    score_col: str = "score",
-    view: str | None = "txtai",
-) -> DataFrame:
-    """similar(<vector>): add a cosine ``score`` column and (optionally)
-    register the scored relation as a temp view for spark.sql."""
-    qv = F.lit([float(x) for x in query_vector])
-    scored = df.withColumn(score_col, cosine_sim(F.col(vector_col), qv))
-    if view:
-        scored.createOrReplaceTempView(view)
-    return scored
-
-
-class TxtaiSQL:
-    """End-to-end txtai-shaped pipeline: index a text corpus, then run
-    SQL with similar('query text').
-
-    Mirrors Embeddings(index → search/SQL) with the encoder pluggable
-    (HashingEncoder by default — deterministic, no model downloads).
-    """
-
-    def __init__(self, spark: SparkSession, encoder: HashingEncoder | None = None):
-        from weaviate_txtai_spark.ship import ensure_shipped
-
-        ensure_shipped(spark)
-        self.spark = spark
-        self.encoder = encoder or HashingEncoder()
-        self._indexed: DataFrame | None = None
-
-    def index(self, docs: DataFrame, *, text_col: str = "text") -> DataFrame:
-        """Encode + store: adds a ``vector`` column (Arrow-batched map-only
-        encode) and keeps all metadata columns (content storage is free in
-        columnar form — T6)."""
-        # re-indexing releases the previous cached corpus — without
-        # this, every index() call leaks a cached frame for the session
-        # lifetime (r13 persist-lifecycle review)
-        if self._indexed is not None:
-            self._indexed.unpersist()
-        self._indexed = self.encoder.encode_df(docs, text_col=text_col).cache()
-        return self._indexed
-
-    def sql(self, query: str, similar_text: str | None = None) -> DataFrame:
-        """Run Spark SQL over the ``txtai`` view; if ``similar_text`` is
-        given, the view carries a ``score`` column for it."""
-        if self._indexed is None:
-            raise RuntimeError("call index() first")
-        if similar_text is not None:
-            attach_scores(
-                self._indexed, self.encoder.encode(similar_text), view="txtai"
-            )
-        else:
-            self._indexed.createOrReplaceTempView("txtai")
-        return self.spark.sql(query)
-
-    def search(self, text: str, limit: int = 3) -> list[tuple]:
-        """embeddings.search parity: top-limit (id-ish row, score)."""
-        if self._indexed is None:
-            raise RuntimeError("call index() first")
-        df = (
-            attach_scores(self._indexed, self.encoder.encode(text), view=None)
-            .orderBy(F.desc("score"))
-            .limit(limit)
-        )
-        return [tuple(r) for r in df.drop("vector").collect()]
