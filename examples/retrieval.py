@@ -3,7 +3,7 @@ driver's embeddings/documents tables.
 
     python examples/retrieval.py [sf_dir]
 
-Modes: exact kNN (expression + GEMM paths), filtered and diversified
+Modes: exact kNN (GEMM + expression paths), filtered and diversified
 search, IVF approximate search with tuned nprobe, BM25 lexical, hybrid
 RRF fusion.
 """
@@ -32,18 +32,18 @@ def main() -> None:
 
     from weaviate_txtai_spark.operators.ann import IVFIndex, tune_nprobe
     from weaviate_txtai_spark.operators.bm25 import bm25_scores
-    from weaviate_txtai_spark.operators.topk import knn_single, knn_topk
+    from weaviate_txtai_spark.operators.topk import knn_topk, knn_topk_gemm
     from weaviate_txtai_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
     docs = load_table(spark, SF_DIR, "documents")
     qv = emb.filter(F.col("vec_id") == 0).head()["embedding"]
 
-    # 1. exact single-query top-5 (TakeOrderedAndProject, no shuffle)
-    exact = knn_single(
+    # 1. exact single-query top-5 (numpy GEMM per Arrow batch, tie-exact)
+    exact = knn_topk_gemm(
         emb.select(F.col("vec_id").alias("docid"), F.col("embedding").alias("vector")),
-        list(qv), 5,
-    ).collect()
+        [(0, list(qv))], 5,
+    ).orderBy("rank").collect()
     print("exact top-5:", [(r["docid"], round(r["score"], 3)) for r in exact])
 
     # 2. batch: 3 queries in one plan

@@ -279,10 +279,35 @@ def test_content_mode_returns_row_dicts(spark):
     assert isinstance(hit, dict)
     assert hit["text"] == "the quick brown fox jumps"
     assert set(hit) == {"id", "text", "score"}
+    # batchsearch returns the same row dicts, one list per query
+    batch = emb.batchsearch(["fox", "stock markets"], 1)
+    assert [b[0]["text"] for b in batch] == [
+        "the quick brown fox jumps",
+        "stock markets rallied on friday",
+    ]
+    assert all(set(b[0]) == {"id", "text", "score"} for b in batch)
     # default (no content) keeps the (id, score) tuple contract
     emb2 = Embeddings(spark)
     emb2.index([(0, "the quick brown fox jumps", None)])
     assert isinstance(emb2.search("fox", 1)[0], tuple)
+
+
+def test_tie_group_wider_than_the_slack_cuts_at_the_lowest_docids(spark):
+    """30 documents share one text, a tie group wider than the 8 hits of
+    slack the backend keeps past the limit: search and batchsearch both
+    cut it at its five lowest docids, in docid order, with one score."""
+    same = "lighthouse keeper watches the stormy sea"
+    e = Embeddings(spark)
+    e.index(
+        [
+            (f"doc-{i}", same if i % 2 else f"quarterly market report {i}", None)
+            for i in range(60)
+        ]
+    )
+    want = [f"doc-{i}" for i in (1, 3, 5, 7, 9)]
+    for hits in (e.search(same, 5), e.batchsearch([same], 5)[0]):
+        assert [h[0] for h in hits] == want
+        assert len({h[1] for h in hits}) == 1
 
 
 def test_batchsearch_matches_sequential_search(emb):

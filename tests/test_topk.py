@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from weaviate_txtai_spark.operators import knn_topk, knn_topk_gemm
-from weaviate_txtai_spark.operators.topk import knn_single, topk_rows
+from weaviate_txtai_spark.operators.topk import topk_rows
 from weaviate_txtai_spark.sources import load_table
 
 
@@ -120,29 +120,6 @@ def test_gemm_rejects_unknown_metric(spark):
     )
     with pytest.raises(ValueError, match="unknown metric"):
         knn_topk_gemm(docs, [(0, [1.0, 0.0])], 1, metric="dot")
-
-
-def test_knn_single_matches_batch(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 3).collect()[0]["embedding"]
-    single = knn_single(emb, qv, 5, vector_col="embedding", id_col="vec_id").collect()
-    assert single[0]["vec_id"] == 3
-    assert [r["vec_id"] for r in single] == sorted(
-        [r["vec_id"] for r in single],
-        key=lambda i: next(-r["score"] for r in single if r["vec_id"] == i),
-    )
-
-
-def test_knn_single_plan_is_take_ordered(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [0.1] * 64
-    plan = (
-        knn_single(emb, qv, 5, vector_col="embedding", id_col="vec_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_gemm_tie_break_matches_expression_path(spark):

@@ -62,7 +62,7 @@ DERIVED = {
     "with_dense_ids",           # __pid from monotonically_increasing_id
     "IVFPQIndex._with_residual",  # cell from kmeans assignment
     "_with_residual",
-    "_ann_search",              # engine-owned dense docid
+    "_knn",                     # engine-owned dense docid
     "_prefix_sums",             # __pid from spark_partition_id
 }
 # (b-up): the named helper guards / derives the keys

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.functions.encoders import HashingEncoder
 from weaviate_txtai_spark.functions.vector import cosine_sim
+from weaviate_txtai_spark.operators.topk import knn_topk_gemm
 
 _SIMILAR_RE = re.compile(r"similar\s*\(\s*'([^']*)'\s*\)", re.IGNORECASE)
 
@@ -103,17 +104,18 @@ class Embeddings:
         # content=True returns row dicts with text, like txtai.
         self.config = dict(config or {})
         self.content = bool(self.config.get("content"))
-        # ANN backend: "exact" (default — brute force, what txtai's
-        # numpy backend does at this scale), "ivf" (cluster-pruned
-        # search through operators.ann.IVFIndex — the role Weaviate's
-        # server-side HNSW plays for the reference), or "ivfpq"
-        # (cells + product-quantized residual codes through
+        # kNN backend, the hit producer of ``_knn``: "exact" (default —
+        # brute force through the GEMM top-k kernel ``knn_topk_gemm``,
+        # what txtai's numpy backend does at this scale), "ivf"
+        # (cluster-pruned search through operators.ann.IVFIndex — the
+        # role Weaviate's server-side HNSW plays for the reference), or
+        # "ivfpq" (cells + product-quantized residual codes through
         # operators.ivfpq.IVFPQIndex — the memory-bound tier: the
         # search scan reads m bytes/vector and the float corpus only
-        # for the shortlist re-rank). Knobs under config["ivf"]: nlist
-        # (default corpus//128, ≥4), nprobe (default 4; nprobe ==
-        # nlist is exact); under config["ivfpq"]: nlist, m, k, iters,
-        # nprobe, shortlist.
+        # for the shortlist re-rank). All three share one rank-and-join
+        # tail. Knobs under config["ivf"]: nlist (default corpus//128,
+        # ≥4), nprobe (default 4; nprobe == nlist is exact); under
+        # config["ivfpq"]: nlist, m, k, iters, nprobe, shortlist.
         self.backend = str(self.config.get("backend", "exact"))
         if self.backend not in ("exact", "ivf", "ivfpq"):
             raise ValueError(f"Embeddings: unknown backend {self.backend!r}")
@@ -335,23 +337,38 @@ class Embeddings:
             vector_col="vector",
         )
 
-    def _ann_search(self, qrows: list[tuple[int, list[float]]], limit: int):
-        """Shared ANN search for search/batchsearch: probe with a small
-        slack, re-rank on the ROUNDED score with the docid tie-break —
-        the exact path's ordering contract (the backends rank raw
-        doubles, so a pair tied at 6 dp could otherwise resolve to a
-        different, valid but non-canonical, member at the cut line) —
-        then join the hits back to their stored rows (broadcast:
-        Q×limit ids)."""
-        idx = self._ann_index()
-        if self.backend == "ivfpq":
+    def _knn(self, queries: Sequence[str], limit: int) -> list[list]:
+        """The one kNN path of ``search`` (text) and ``batchsearch``:
+        one ``search``-shaped result list per query, in query order.
+
+        The backend produces ``(qid, docid, score)`` hits with a slack of
+        8 past ``limit``: the exact backend through ``knn_topk_gemm``
+        (the tie-exact kernel ``VectorIndex.search`` uses), IVF and
+        IVF-PQ through their cached index. One tail serves all three:
+        round to 6 dp, re-rank on the ROUNDED score with the docid
+        tie-break (the producers rank raw doubles, so a pair tied at
+        6 dp could otherwise resolve to a different, valid but
+        non-canonical, member at the cut line), cut to ``limit``, then
+        join the hits back to their stored rows (broadcast: Q×limit
+        ids) and order those few rows on the driver. In content mode a
+        hit is a row dict with the stored text, txtai style:
+        search(...)[0]["text"] (notebook cell 22)."""
+        qrows = [
+            (i, [float(x) for x in self.encoder.encode(q)])
+            for i, q in enumerate(queries)
+        ]
+        if self.backend == "exact":
+            hits = knn_topk_gemm(self._df, qrows, limit + 8).select(
+                F.col("query_id").alias("qid"), "docid", "score"
+            )
+        elif self.backend == "ivfpq":
             # ADC shortlist + exact L2 re-rank, then the L2→cosine
             # identity for unit vectors (encoders L2-normalize, so
             # cos = 1 − d²/2 EXACTLY) gives the facade's score contract.
             # `or`-defaults: an explicit None in the config dict must
             # fall back like a missing key, not crash in int(None)
             cfg = dict(self.config.get("ivfpq") or {})
-            hits = idx.search(
+            hits = self._ann_index().search(
                 qrows,
                 limit + 8,
                 nprobe=int(cfg.get("nprobe") or 4),
@@ -359,39 +376,37 @@ class Embeddings:
             ).select(
                 F.col("query_id").cast("int").alias("qid"),
                 "docid",
-                F.round(F.lit(1.0) - F.col("dist") / F.lit(2.0), 6).alias("score"),
+                (F.lit(1.0) - F.col("dist") / F.lit(2.0)).alias("score"),
             )
         else:
             nprobe = int(dict(self.config.get("ivf") or {}).get("nprobe", 4))
             qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
-            hits = idx.search(
+            hits = self._ann_index().search(
                 qdf, limit + 8, nprobe=nprobe,
                 query_id_col="qid", query_vector_col="qv",
-            ).select("qid", "docid", F.round("score", 6).alias("score"))
+            ).select("qid", "docid", "score")
         w = Window.partitionBy("qid").orderBy(
             F.desc("score"), F.asc("docid")
         )
         hits = (
-            hits.withColumn("rank", F.row_number().over(w))
+            hits.withColumn("score", F.round("score", 6))
+            .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= limit)
         )
         cols = ["docid", "id", "text"] if self.content else ["docid", "id"]
-        return (
-            self._df.select(*cols)
-            .join(F.broadcast(hits), "docid")
-            .orderBy("qid", "rank")
-        )
-
-    def _hit(self, r) -> Any:
-        """One search result in the facade's shape: ``(id, score)``, or
-        in content mode a row dict with the stored text, txtai style:
-        search(...)[0]["text"] (notebook cell 22)."""
-        if self.content:
-            return {"id": r["id"], "text": r["text"], "score": r["score"]}
-        return (r["id"], r["score"])
+        top = self._df.select(*cols).join(F.broadcast(hits), "docid").collect()
+        out: list[list] = [[] for _ in queries]
+        for r in sorted(top, key=lambda r: (r["qid"], r["rank"])):
+            out[r["qid"]].append(
+                {"id": r["id"], "text": r["text"], "score": r["score"]}
+                if self.content
+                else (r["id"], r["score"])
+            )
+        return out
 
     def search(self, query: str, limit: int = 3) -> list:
-        """Text query → [(id, score)] top-limit by cosine; SQL query
+        """Text query → [(id, score)] top-limit by cosine, ties to the
+        lowest docid, through ``_knn`` with one query row; SQL query
         (starts with 'select') → list of row dicts, txtai-style."""
         if self._df is None:
             return []
@@ -402,18 +417,7 @@ class Embeddings:
             # clauses filter the scored view, and a probe set chosen
             # before the filter would silently under-fill the limit
             return self._search_sql(query, limit)
-        if self.backend in ("ivf", "ivfpq"):
-            top = self._ann_search(
-                [(0, [float(x) for x in self.encoder.encode(query)])], limit
-            )
-        else:
-            top = (
-                self._scored(query)
-                .orderBy(F.desc("score"), F.asc("docid"))
-                .limit(limit)
-            )
-        cols = ["id", "text", "score"] if self.content else ["id", "score"]
-        return [self._hit(r) for r in top.select(*cols).collect()]
+        return self._knn([query], limit)[0]
 
     def _search_sql(self, query: str, limit: int) -> list[dict]:
         rewritten, similar_text = rewrite_similar_sql(query)
@@ -494,36 +498,15 @@ class Embeddings:
         return self
 
     def batchsearch(self, queries: Sequence[str], limit: int = 3) -> list:
-        """txtai ``batchsearch``: N text queries in ONE Spark job — the
-        batch-first design the reference cannot express (it drops all
-        but queries[0], weaviate.py:177). Query vectors broadcast onto a
-        single scan of the index; per-query top-k via a window ranked
-        inside each query partition. Returns a list of ``search``-shaped
-        result lists, in query order."""
+        """txtai ``batchsearch``: N text queries through the one kNN
+        path ``search`` takes (``_knn``) — the batch-first design the
+        reference cannot express (it drops all but queries[0],
+        weaviate.py:177). Every query is scored in the same pass over
+        the index; returns a list of ``search``-shaped result lists, in
+        query order."""
         if self._df is None or not queries:
             return [[] for _ in queries]
-        qrows = [
-            (i, [float(x) for x in self.encoder.encode(q)])
-            for i, q in enumerate(queries)
-        ]
-        if self.backend in ("ivf", "ivfpq"):
-            top = self._ann_search(qrows, limit)
-        else:
-            qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
-            w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-            cols = ["qid", "id", "text", "score"] if self.content else ["qid", "id", "score"]
-            top = (
-                self._df.crossJoin(F.broadcast(qdf))
-                .withColumn("score", F.round(cosine_sim("vector", "qv"), 6))
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= limit)
-                .select(*cols)
-                .orderBy("qid", "__rn")
-            )
-        out: list[list] = [[] for _ in queries]
-        for r in top.collect():
-            out[r["qid"]].append(self._hit(r))
-        return out
+        return self._knn(queries, limit)
 
     def batchsimilarity(
         self, queries: Sequence[str], texts: Sequence[str]
@@ -557,16 +540,5 @@ class Embeddings:
     def similarity(self, query: str, texts: Sequence[str]) -> list:
         """Ad-hoc brute-force scoring, no stored index (reference Q9,
         examples/01_simple.ipynb cell 7): [(index, score)] sorted desc —
-        the same cosine code path as search, over a throwaway frame."""
-        data = self.spark.createDataFrame(
-            list(enumerate(texts)), schema="idx int, text string"
-        )
-        scored = self.encoder.encode_df(data, text_col="text")
-        qv = F.lit([float(x) for x in self.encoder.encode(query)])
-        out = (
-            scored.withColumn("score", F.round(cosine_sim("vector", qv), 6))
-            .orderBy(F.desc("score"), F.asc("idx"))
-            .select("idx", "score")
-            .collect()
-        )
-        return [(r["idx"], r["score"]) for r in out]
+        ``batchsimilarity`` with one query."""
+        return self.batchsimilarity([query], texts)[0]

@@ -17,13 +17,10 @@ Physical strategy (designed for 100 TB / 1000 executors):
 - Top-k per query = window ``row_number() <= k`` partitioned by query id.
   The map-side is embarrassingly parallel; the only shuffle is the final
   (num_queries × k × partitions)-row merge, which AQE coalesces.
-- For a single query we use ``orderBy().limit(k)`` which Catalyst plans as
-  ``TakeOrderedAndProject`` — per-partition heaps + driver merge, zero
-  shuffle.
-- ``knn_topk_gemm`` is the Arrow path ``VectorIndex.search`` takes for every
-  query count: numpy GEMM per Arrow batch over ``mapInPandas`` with
-  per-partition top-k reduction, so the rows crossing the final shuffle are
-  k per (query, partition), never M×N.
+- ``knn_topk_gemm`` is the Arrow path ``VectorIndex.search`` and the exact
+  ``Embeddings`` backend take for every query count: numpy GEMM per Arrow
+  batch over ``mapInPandas`` with per-partition top-k reduction, so the
+  rows crossing the final shuffle are k per (query, partition), never M×N.
 - ``topk_rows`` is the one tie-exact top-k step every Arrow scorer shares
   (``knn_topk_gemm``, the IVF cogroup, the PQ/IVF-PQ ADC kernels): one
   vectorized cut per block, exact under ties at the k-th key.
@@ -84,29 +81,6 @@ def knn_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def knn_single(
-    index_df: DataFrame,
-    query_vector: list[float],
-    k: int,
-    *,
-    vector_col: str = "vector",
-    id_col: str = "docid",
-) -> DataFrame:
-    """Single-query top-k, planned as TakeOrderedAndProject (no shuffle).
-
-    This is the exact reference hot path (weaviate.py:175-201): one query
-    vector, ``limit`` results, cosine similarity scores.
-    """
-    qv = F.lit([float(x) for x in query_vector])
-    return (
-        index_df.select(
-            F.col(id_col), cosine_sim(F.col(vector_col), qv).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
     )
 
 
