@@ -1,5 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+sf0.1) on local[$SPARK_GRAFT_CPUS]; unset, the session takes the cores
+this process may run on (``len(os.sched_getaffinity(0))``). Prints ONE
+JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing = full plan execution to a count/collect of the result (Spark is
@@ -7,6 +9,11 @@ lazy; every query is forced). A warmup query spins up the JVM/executors
 and Arrow Python workers before timing starts; each headline query then
 runs ``RUNS`` times and reports the fastest (steady-state measurement —
 single-run numbers on local mode carry ±50% scheduler/GC noise).
+
+The tools under ``tools/`` import this module's session
+(``spark_session``), timed run (``timed_run``) and warm-up
+(``warm_up``), so every tool measures and checks on the session this
+harness times. Importing the module starts no Spark.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 # Headline set: the operators whose scale behavior matters most —
 # vector search (expr + GEMM paths), similarity join, the dedup family,
@@ -112,12 +119,16 @@ HEADLINE_HEAVY = [
 ]
 
 
-def main() -> None:
+def spark_session(app: str, conf: dict | None = None):
+    """The one Spark session of the bench and the tools: local[CPUS]
+    with CPUS shuffle partitions, UTC, AQE, Kryo and a 16 GB driver.
+    ``conf`` overrides single settings (a smaller driver beside an
+    in-process DuckDB, or a config experiment)."""
     from pyspark.sql import SparkSession
 
-    spark = (
+    b = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("weaviate_txtai_spark-bench")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -125,17 +136,41 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .getOrCreate()
     )
+    for k, v in (conf or {}).items():
+        b = b.config(k, v)
+    spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark, qs) -> None:
+    """JVM + codegen + parquet footer caches + Arrow Python workers."""
+    qs["vector_count"](spark, SF_DIR).collect()
+    qs["knn_topk"](spark, SF_DIR).count()
+
+
+def timed_run(spark, build) -> tuple[float, float, int]:
+    """One timed run of ``build()``, a function returning a DataFrame:
+    clear the cache, build the frame, force it with ``count()``.
+    Returns (build seconds, act seconds, rows). Clearing first keeps a
+    run's intra-query persist() calls from leaking into the next: every
+    run pays the full cost of its own plan."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    n = df.count()
+    return t1 - t0, time.perf_counter() - t1, n
+
+
+def main() -> None:
+    spark = spark_session("weaviate_txtai_spark-bench")
 
     from weaviate_txtai_spark.plans.queries import queries
 
     qs = queries()
-
-    # warmup: JVM + codegen + parquet footer caches + Arrow Python workers
-    qs["vector_count"](spark, SF_DIR).collect()
-    qs["knn_topk"](spark, SF_DIR).count()
+    warm_up(spark, qs)
 
     # best-of-5: this box shares cores with noisy neighbors (observed
     # load spikes of 8-12 from other tenants mid-run); a larger sample
@@ -153,13 +188,8 @@ def main() -> None:
         fn = qs[name]
         best, n = float("inf"), 0
         for _ in range(runs):
-            # intra-query persist() calls must not leak into the next run:
-            # every timed run pays the full cost of its own plan.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            n = df.count()
-            best = min(best, time.perf_counter() - t0)
+            build_s, act_s, n = timed_run(spark, lambda: fn(spark, SF_DIR))
+            best = min(best, build_s + act_s)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
 

@@ -559,3 +559,33 @@ def test_ivfpq_backend_mutation_invalidates(spark):
     pq.delete(["d3"])
     assert pq.search(docs[3][1], 1)[0][0] != "d3"
     assert pq._ann is not idx_before
+
+
+@pytest.mark.parametrize(
+    "backend, keys, value",
+    [
+        ("ivf", ("nlist", "nprobe"), None),
+        ("ivfpq", ("nlist", "m", "k", "iters", "nprobe", "shortlist"), None),
+        ("ivfpq", ("nprobe", "shortlist"), 0),
+    ],
+)
+def test_none_backend_settings_search_like_the_defaults(
+    spark, backend, keys, value
+):
+    """An explicit None for a backend setting (as save() keeps it
+    through JSON) reads as missing: a config with every setting None
+    searches exactly like the default config. So does an IVF-PQ
+    nprobe/shortlist of 0, which would otherwise probe no cell and skip
+    the exact re-rank."""
+    docs = _docs(40)
+    out = []
+    for cfg in (
+        {"backend": backend},
+        {"backend": backend, backend: dict.fromkeys(keys, value)},
+    ):
+        e = Embeddings(spark, config=cfg)
+        e.index(docs)
+        out.append(
+            (e.search(docs[0][1], 5), e.batchsearch(["fox river", docs[3][1]], 3))
+        )
+    assert out[0] == out[1]

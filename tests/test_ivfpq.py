@@ -375,3 +375,37 @@ def test_tune_search_params_joint_minimal(index, emb):
         index, qs, 5, nprobe=npb, recall_target=target, max_shortlist=32,
     )
     assert sl_single == sl
+
+
+def test_driver_and_df_search_probe_by_one_rule(spark):
+    """search (driver batch) and search_df probe the same cell at a 9-dp
+    centroid tie: both rank round(L2, 9) with ties to the lowest cell.
+    q = (0, 0) lies 1.0000000002 from c0 and 1 from c1 — unrounded, c1
+    is nearer; rounded, they tie and c0 wins."""
+    import dataclasses
+
+    from weaviate_txtai_spark.operators.ann import IVFIndex
+
+    pts = [(0, [1.0, 0.0]), (1, [1.1, 0.1]), (2, [0.9, -0.1]),
+           (3, [0.0, -1.0]), (4, [0.1, -1.1]), (5, [-0.1, -0.9])]
+    built = IVFPQIndex.build(
+        spark.createDataFrame(pts, "vec_id long, embedding array<float>"),
+        nlist=2, m=2, k_pq=2, pq_iters=1,
+    )
+    hand = [(0, [1.0000000001, 0.0]), (1, [0.0, -1.0])]
+    idx = dataclasses.replace(
+        built,
+        ivf=IVFIndex(built.ivf.assigned, hand, "vec_id", "embedding"),
+    )
+    kw = dict(nprobe=1, shortlist=3)
+    batch = sorted(
+        tuple(r) for r in idx.search([(0, [0.0, 0.0])], 2, **kw).collect()
+    )
+    qdf = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "query_id long, query_vector array<float>"
+    )
+    dfres = sorted(
+        (r["query_id"], r["vec_id"], r["dist"], r["rank"])
+        for r in idx.search_df(qdf, 2, **kw).collect()
+    )
+    assert len(batch) == 2 and batch == dfres

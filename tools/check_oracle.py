@@ -3,9 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at sf0.01, compares row count, column names, and order-insensitive values
 (rows sorted by all columns, floats compared exactly after the in-query
-rounding). Spark runs on local[$SPARK_GRAFT_CPUS] (default: all cores);
-DuckDB is bounded to DUCKDB_THREADS threads and DUCKDB_MEMORY, spilling
-to a temporary directory outside the tree that is removed at exit.
+rounding). Spark runs on bench.py's session with a 6g driver; DuckDB
+is bounded to DUCKDB_THREADS threads and DUCKDB_MEMORY, spilling to a
+temporary directory outside the tree that is removed at exit.
 Usage: python tools/check_oracle.py [name ...]
 """
 
@@ -20,10 +20,10 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
+
+from bench import spark_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 # the same bound perfbench/oracle.py puts on DuckDB: an unbounded
 # in-process DuckDB grew past the box's memory on the sf0.1 oracles
 DUCKDB_THREADS = 2
@@ -49,14 +49,9 @@ def main():
     oracles = entrymod.oracle_sql()
     only = set(sys.argv[1:])
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
+    # bench.py's session; the 6g driver leaves room for DuckDB's 4 GB
+    # in the same process
+    spark = spark_session("check-oracle", {"spark.driver.memory": "6g"})
     spill = tempfile.mkdtemp(prefix="check-oracle-")
     try:
         failed = run(spark, qs, oracles, only, spill)

@@ -5,9 +5,10 @@
 set -e
 cd "$(dirname "$0")/.."
 
-# Size every Spark session (tests, bench.py, scale_check.py) to this
-# machine's cores; unset, bench.py and scale_check.py default to local[32].
-# nproc honours OMP_NUM_THREADS, so read the core count without it.
+# Size every Spark session (tests, bench.py and the tools, which take
+# bench.py's session) to this machine's cores; unset, bench.py takes the
+# cores this process may use. nproc honours OMP_NUM_THREADS, so read the
+# core count without it.
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 

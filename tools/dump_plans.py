@@ -78,19 +78,11 @@ def digest(plan: str) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from bench import spark_session
     from weaviate_txtai_spark.plans.explain import formatted_plan
     from weaviate_txtai_spark.plans.queries import queries
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("dump-plans")
     qs = queries()
 
     out = [

@@ -5,7 +5,7 @@ Usage: python tools/opt_bench.py [-n RUNS] [--noop] name [name ...]
 Per run: clearCache, build the query (timed as `build`), then force it
 (timed as `act`) with df.count() — the bench's action — or with the noop
 sink (--noop; computes every column, guide §1.4). Reports per-run and
-best times. Session shape matches bench.py exactly.
+best times. The session, the warm-up and the count() run are bench.py's.
 """
 
 from __future__ import annotations
@@ -16,8 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from bench import SF_DIR, spark_session, timed_run, warm_up
 
 
 def main() -> None:
@@ -33,56 +32,41 @@ def main() -> None:
         args.remove("--noop")
     names = args
 
-    from pyspark.sql import SparkSession
-
-    b = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("opt-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    )
     # config experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
+    conf = {}
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
-            b = b.config(k.strip(), v.strip())
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+            conf[k.strip()] = v.strip()
+    spark = spark_session("opt-bench", conf)
 
     from weaviate_txtai_spark.plans.queries import queries
 
     qs = queries()
-    # warmup identical to bench.py
-    qs["vector_count"](spark, SF_DIR).collect()
-    qs["knn_topk"](spark, SF_DIR).count()
+    warm_up(spark, qs)
 
     for name in names:
         fn = qs[name]
         best_total, best_build, best_act = 1e9, 1e9, 1e9
         for r in range(runs):
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} run {r}")
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            t1 = time.perf_counter()
             if use_noop:
+                spark.catalog.clearCache()
+                t0 = time.perf_counter()
+                df = fn(spark, SF_DIR)
+                t1 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
+                build, act = t1 - t0, time.perf_counter() - t1
             else:
-                df.count()
-            t2 = time.perf_counter()
+                build, act, _ = timed_run(spark, lambda: fn(spark, SF_DIR))
             print(
-                f"# {name} run{r}: build={t1-t0:.3f} act={t2-t1:.3f} "
-                f"total={t2-t0:.3f}",
+                f"# {name} run{r}: build={build:.3f} act={act:.3f} "
+                f"total={build + act:.3f}",
                 file=sys.stderr, flush=True,
             )
-            best_total = min(best_total, t2 - t0)
-            best_build = min(best_build, t1 - t0)
-            best_act = min(best_act, t2 - t1)
+            best_total = min(best_total, build + act)
+            best_build = min(best_build, build)
+            best_act = min(best_act, act)
         print(
             f"{name}: best_total={best_total:.3f} best_build={best_build:.3f} "
             f"best_act={best_act:.3f} ({'noop' if use_noop else 'count'})",

@@ -27,87 +27,46 @@ show a quadratic step instead (the uncapped 1x run in scale_check's
 Per-step ratios are also recorded but carry +/-50% single-run
 scheduler noise on a busy box — judge on the aggregate.
 
-Writes results into SCALE_CHECK.json under "skew_4x".
+Every corpus is generated (none is read from $SPARK_GRAFT_SF_DIR). Runs
+on bench.py's session; each measurement is one ``bench.timed_run``.
+Writes results into SCALE_CHECK.json under "skew_4x" through
+scale_check's ``merge_write``.
 Usage: python tools/skew4x.py
 """
-import json
 import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "16g")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+from bench import spark_session, timed_run
+from scale_check import SCALE_CHECK, merge_write, skew_corpus
+
+N = 6000
+NG = 400_000
+DIM = 16
+NV = 20_000
+NS = 2000
+NB = 4000
 
 
-def run(make_df):
-    t0 = time.monotonic()
-    n = make_df().count()
-    return time.monotonic() - t0, n
-
-
-def profile(name, fn, warm_arg, args):
+def profile(spark, name, fn, warm_arg, args):
     fn(warm_arg).count()  # warm the JVM/codegen for this plan shape
     out = {}
     ts = []
     for label, a in zip(("1x", "2x", "4x"), args):
-        t, n = run(lambda: fn(a))
-        out[f"t_{label}"] = round(t, 3)
+        b, act, n = timed_run(spark, lambda: fn(a))
+        out[f"t_{label}"] = round(b + act, 3)
         out[f"rows_{label}"] = n
-        ts.append(t)
+        ts.append(b + act)
     out["step_2x"] = round(ts[1] / ts[0], 2) if ts[0] > 0 else None
     out["step_4x"] = round(ts[2] / ts[1], 2) if ts[1] > 0 else None
     print(name, out, flush=True)
     return out
 
 
-results = {}
-
-# ---- dedup: hot-shingle boilerplate, capped ---------------------------
-from weaviate_txtai_spark.operators.dedup import jaccard_pairs
-
-
-def skew_docs(n):
-    boiler = F.lit(
-        "terms of service apply to all content on this page as follows"
-    )
-    tail = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(20)),
-            lambda j: F.concat(F.lit("t"), (F.col("id") * 20 + j).cast("string")),
-        ),
-    )
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(" ", boiler, tail).alias("text"),
-    )
-
-
-N = 6000
-results["dedup_hot_shingle"] = profile(
-    "dedup_hot_shingle",
-    lambda d: jaccard_pairs(d, threshold=0.8, max_doc_freq=50),
-    skew_docs(N),
-    [skew_docs(N), skew_docs(2 * N), skew_docs(4 * N)],
-)
-
-# ---- graph: hub skew through pagerank ---------------------------------
-from weaviate_txtai_spark.operators.graph import pagerank
-
-
-def hub_graph(n):
+def hub_graph(spark, n):
     spokes = spark.range(n).select(
         (F.col("id") + 1).alias("src"), F.lit(0).alias("dst")
     )
@@ -118,21 +77,7 @@ def hub_graph(n):
     return spokes.unionByName(mesh)
 
 
-NG = 400_000
-results["graph_hub"] = profile(
-    "graph_hub",
-    lambda e: pagerank(e, iters=3),
-    hub_graph(NG),
-    [hub_graph(NG), hub_graph(2 * NG), hub_graph(4 * NG)],
-)
-
-# ---- simjoin: one hot k-means cell ------------------------------------
-from weaviate_txtai_spark.operators.simjoin import topk_join_ivf
-
-DIM = 16
-
-
-def hot_cluster(n, id_off=0):
+def hot_cluster(spark, n, id_off=0):
     # 90% of vectors: one direction + id-dependent jitter in dims 1..3;
     # 10%: spread over 10 other directions. All expressions, no UDF.
     comp = F.transform(
@@ -154,12 +99,11 @@ def hot_cluster(n, id_off=0):
     )
 
 
-NV = 20_000
+def ivf_case(spark, n):
+    from weaviate_txtai_spark.operators.simjoin import topk_join_ivf
 
-
-def ivf_case(n):
-    corpus = hot_cluster(n)
-    queries = hot_cluster(n // 20, id_off=10_000_000).select(
+    corpus = hot_cluster(spark, n)
+    queries = hot_cluster(spark, n // 20, id_off=10_000_000).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vector"),
     )
@@ -174,20 +118,7 @@ def ivf_case(n):
     )
 
 
-results["simjoin_hot_cell"] = profile(
-    "simjoin_hot_cell",
-    lambda n: ivf_case(n),
-    NV,
-    [NV, 2 * NV, 4 * NV],
-)
-
-# ---- stringjoin: low-entropy constant-prefix names --------------------
-from weaviate_txtai_spark.operators.stringjoin import edit_distance_join
-
-NS = 2000
-
-
-def low_entropy_names(n):
+def low_entropy_names(spark, n):
     return spark.range(n).select(
         F.col("id"),
         F.concat(
@@ -196,24 +127,13 @@ def low_entropy_names(n):
     )
 
 
-results["stringjoin_low_entropy"] = profile(
-    "stringjoin_low_entropy",
-    lambda d: edit_distance_join(d, "id", "s", k=1, q=2),
-    low_entropy_names(NS),
-    [low_entropy_names(NS), low_entropy_names(2 * NS), low_entropy_names(4 * NS)],
-)
-
-# ---- binary media dedup: universal format-header hot window -----------
-# Every payload starts with the SAME 64-byte "magic header" (the JPEG/
-# PNG reality: format magic is corpus-universal), followed by a distinct
-# body with planted near-dup pairs. The header contributes ~49 sampled
-# hot windows each with df = N; the LSH path must stay input-linear
-# (banding never joins on a single shingle; signatures are dominated by
-# body windows) where the uncapped exact path would go O(N^2).
-from weaviate_txtai_spark.multimodal.binary import binary_dup_pairs
-
-
-def header_media(n):
+def header_media(spark, n):
+    # Every payload starts with the SAME 64-byte "magic header" (the JPEG/
+    # PNG reality: format magic is corpus-universal), followed by a distinct
+    # body with planted near-dup pairs. The header contributes ~49 sampled
+    # hot windows each with df = N; the LSH path must stay input-linear
+    # (banding never joins on a single shingle; signatures are dominated by
+    # body windows) where the uncapped exact path would go O(N^2).
     header = F.lit("FFD8FFE0JFIFHDR!" * 4)  # 64-byte shared magic
     body = F.concat_ws(
         "",
@@ -235,16 +155,53 @@ def header_media(n):
     )
 
 
-NB = 4000
-results["binary_header_hot_window"] = profile(
-    "binary_header_hot_window",
-    lambda d: binary_dup_pairs(d, k=16, threshold=0.5),
-    header_media(NB),
-    [header_media(NB), header_media(2 * NB), header_media(4 * NB)],
-)
+def main() -> None:
+    from weaviate_txtai_spark.multimodal.binary import binary_dup_pairs
+    from weaviate_txtai_spark.operators.dedup import jaccard_pairs
+    from weaviate_txtai_spark.operators.graph import pagerank
+    from weaviate_txtai_spark.operators.stringjoin import edit_distance_join
 
-path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_CHECK.json")
-doc = json.load(open(path))
-doc["skew_4x"] = results
-json.dump(doc, open(path, "w"), indent=1)
-print("written skew_4x to SCALE_CHECK.json")
+    spark = spark_session("skew4x")
+
+    def three(make, n):
+        return [make(spark, n), make(spark, 2 * n), make(spark, 4 * n)]
+
+    results = {
+        # dedup: hot-shingle boilerplate, capped
+        "dedup_hot_shingle": profile(
+            spark, "dedup_hot_shingle",
+            lambda d: jaccard_pairs(d, threshold=0.8, max_doc_freq=50),
+            skew_corpus(spark, N), three(skew_corpus, N),
+        ),
+        # graph: hub skew through pagerank
+        "graph_hub": profile(
+            spark, "graph_hub",
+            lambda e: pagerank(e, iters=3),
+            hub_graph(spark, NG), three(hub_graph, NG),
+        ),
+        # simjoin: one hot k-means cell
+        "simjoin_hot_cell": profile(
+            spark, "simjoin_hot_cell",
+            lambda n: ivf_case(spark, n),
+            NV, [NV, 2 * NV, 4 * NV],
+        ),
+        # stringjoin: low-entropy constant-prefix names
+        "stringjoin_low_entropy": profile(
+            spark, "stringjoin_low_entropy",
+            lambda d: edit_distance_join(d, "id", "s", k=1, q=2),
+            low_entropy_names(spark, NS), three(low_entropy_names, NS),
+        ),
+        # binary media dedup: universal format-header hot window
+        "binary_header_hot_window": profile(
+            spark, "binary_header_hot_window",
+            lambda d: binary_dup_pairs(d, k=16, threshold=0.5),
+            header_media(spark, NB), three(header_media, NB),
+        ),
+    }
+    merge_write(SCALE_CHECK, {"skew_4x": results})
+    print("written skew_4x to SCALE_CHECK.json")
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -6,117 +6,58 @@ two worst (docs_heaps_law 1.44, customer_linkage_em 1.58-with-2x-
 output), and in r11 with the remaining top-10 heavy-bench families
 (VERDICT r10 task 6): sim_join_ivfpq (nlist ∝ corpus), order_scc,
 pretraining_manifest, doc_centrality. The 4x corpus is two more
-perturbed clones (token prefixes 'y'/'z'; a third sign-flip pattern
-for embeddings; disjoint key+nation shifts for customers; disjoint
-custkey/orderkey shifts for orders), so every doubling is structurally
-honest like the 2x one. Writes the measurements into SCALE_CHECK.json
-under "tail_4x".
+perturbed clones, copies 2 and 3 of scale_check's clone builders (token
+prefixes 'y'/'z'; further sign-flip patterns for embeddings; disjoint
+key+nation shifts for customers; disjoint custkey/orderkey shifts for
+orders), so every doubling is structurally honest like the 2x one. The
+query bodies are scale_check's, and so is the timing (best of 2
+``bench.timed_run``s). Writes the measurements into SCALE_CHECK.json
+under "tail_4x" through ``merge_write``.
 
-Usage: python tools/tail4x.py
+Usage: python tools/tail4x.py  (tables from $SPARK_GRAFT_SF_DIR, default
+sf0.1)
 """
-import os, sys, time, json
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from pyspark.sql import SparkSession, functions as F
-spark = (SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions","32")
-    .config("spark.sql.adaptive.enabled","true")
-    .config("spark.sql.session.timeZone","UTC")
-    .config("spark.ui.enabled","false")
-    .config("spark.driver.memory","16g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-from weaviate_txtai_spark.sources.tables import load_table
-SF="/root/testdata/sf0.1"
 
-docs1 = load_table(spark, SF, "documents")
-def doc_clone(d, off, pref):
-    return (d.withColumn("doc_id", F.col("doc_id")+F.lit(off))
-        .withColumn("text", F.concat_ws(" ", F.transform(F.split(F.col("text")," "),
-            lambda t: F.concat(F.lit(pref), t)))))
-docs2 = docs1.unionByName(doc_clone(docs1, 1_000_000, "x"))
-docs4 = docs2.unionByName(doc_clone(docs1, 2_000_000, "y")).unionByName(doc_clone(docs1, 3_000_000, "z"))
+import json
+import os
+import sys
 
-emb1 = load_table(spark, SF, "embeddings")
-def emb_clone(e, off, mode):
-    if mode == 0:
-        f = lambda x, i: F.when(i % 2 == 0, x).otherwise(-x)
-    elif mode == 1:
-        f = lambda x, i: F.when(i % 2 == 1, x).otherwise(-x)
-    else:
-        f = lambda x, i: F.when((i % 4) < 2, x).otherwise(-x)
-    return (e.withColumn("vec_id", F.col("vec_id")+F.lit(off))
-        .withColumn("embedding", F.transform("embedding", f).cast("array<float>")))
-emb2 = emb1.unionByName(emb_clone(emb1, 1_000_000, 0))
-emb4 = emb2.unionByName(emb_clone(emb1, 2_000_000, 1)).unionByName(emb_clone(emb1, 3_000_000, 2))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-li1 = load_table(spark, SF, "lineitem")
-cp1 = (load_table(spark, SF, "orders")
-    .join(li1, F.col("o_orderkey")==F.col("l_orderkey"))
-    .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")))
-def cp_clone(c, off):
-    return c.withColumn("cust", F.col("cust")+F.lit(off)).withColumn("part", F.col("part")+F.lit(off))
-cp2 = cp1.unionByName(cp_clone(cp1, 1_000_000))
-cp4 = cp2.unionByName(cp_clone(cp1, 2_000_000)).unionByName(cp_clone(cp1, 3_000_000))
+from pyspark.sql import functions as F
 
-cust1 = load_table(spark, SF, "customer")
-def cust_clone(c, off):
-    # disjoint component: keys AND the blocking nation shifted
-    return (c.withColumn("c_custkey", F.col("c_custkey")+F.lit(off))
-        .withColumn("c_nationkey", F.col("c_nationkey")+F.lit(off//400_000)))
-cust2 = cust1.unionByName(cust_clone(cust1, 10_000_000))
-cust4 = cust2.unionByName(cust_clone(cust1, 20_000_000)).unionByName(cust_clone(cust1, 30_000_000))
+from bench import SF_DIR, spark_session
+from scale_check import (
+    SCALE_CHECK,
+    cust_part,
+    cust_part_clone,
+    customer_clone,
+    doc_clone,
+    emb_clone,
+    grown,
+    merge_write,
+    orders_clone,
+    q_affinity,
+    q_centrality,
+    q_heaps,
+    q_jsd,
+    q_linkage_em,
+    q_prefix_jaccard,
+    q_simjoin_pq,
+    q_threshold_bucketed,
+    run,
+)
 
-def q_affinity(cp):
-    from weaviate_txtai_spark.operators.linkpred import link_scores
-    return link_scores(cp, "cust", "part", max_item_degree=20, min_common=2)
-def q_prefix_jaccard(d):
-    from weaviate_txtai_spark.operators.setjoin import jaccard_prefix_pairs
-    return jaccard_prefix_pairs(d, threshold=0.8)
-def q_jsd(d):
-    from weaviate_txtai_spark.functions.text import tokens
-    from weaviate_txtai_spark.operators.drift import jsd_drift
-    tok = d.select("source", F.explode(tokens("text")).alias("tok"))
-    return jsd_drift(tok, group_col="source", token_col="tok")
-def q_threshold_bucketed(e):
-    from weaviate_txtai_spark.operators.simjoin import threshold_join
-    left = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vector"))
-    return threshold_join(left, e, 0.9, right_id="vec_id", right_vec="embedding", strategy="bucketed")
-# q_heaps / q_linkage_em are imported from scale_check (same bodies
-# must drive the 1x/2x and 4x harnesses)
-from scale_check import q_heaps, q_linkage_em  # noqa: E402
-
-# ---- r11 additions: the remaining top-10 heavy-bench families --------
-ord1 = load_table(spark, SF, "orders").select("o_orderkey", "o_custkey")
-def ord_clone(o, off):
-    # disjoint chains: both the key and the grouping customer shift
-    return (o.withColumn("o_orderkey", F.col("o_orderkey")+F.lit(off))
-        .withColumn("o_custkey", F.col("o_custkey")+F.lit(off)))
-ord2 = ord1.unionByName(ord_clone(ord1, 10_000_000))
-ord4 = ord2.unionByName(ord_clone(ord1, 20_000_000)).unionByName(ord_clone(ord1, 30_000_000))
-
-def q_simjoin_pq(nlist):
-    # nlist ∝ corpus (constant cell size), production nprobe/shortlist —
-    # the same operational rule as scale_check's 1x/2x case
-    def inner(e):
-        from weaviate_txtai_spark.operators.simjoin import topk_join_ivfpq
-        left = e.select(F.col("vec_id").alias("query_id"),
-                        F.col("embedding").alias("query_vector"))
-        return topk_join_ivfpq(left, e, 3, right_id="vec_id",
-            right_vec="embedding", nlist=nlist, nprobe=4, m=8, k_pq=16,
-            pq_iters=1, shortlist=10)
-    return inner
-
-def q_centrality(e):
-    from weaviate_txtai_spark.operators.graph import knn_graph, pagerank_exact
-    return pagerank_exact(knn_graph(e, 3), iters=3)
 
 def q_scc(orders):
     # the order_scc gate's graph: per-customer directed chain with a
     # back-edge every 4th position (4-cycles + trailing singletons)
     from pyspark.sql import Window
+
     from weaviate_txtai_spark.operators.graph import (
         strongly_connected_components,
     )
+
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
     pos = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -135,12 +76,15 @@ def q_scc(orders):
         chain.unionByName(backe), src="src", dst="dst"
     )
 
+
 def q_curation(d):
     # the curation_run gate body, shared with the gate itself
     # (plans/pipeline.py curation_report) so this profile can never
     # drift from the plan it is evidence for
     from weaviate_txtai_spark.plans.pipeline import curation_report
+
     return curation_report(d)
+
 
 def q_manifest(d):
     # the pretraining_manifest gate body, parameterized on the corpus
@@ -150,6 +94,7 @@ def q_manifest(d):
         dedup_survivors, jaccard_pairs,
     )
     from weaviate_txtai_spark.operators.lm import nll_quality_filter
+
     surv = scoped_persist(
         dedup_survivors(d, jaccard_pairs(d, threshold=0.8)).select(
             "doc_id", "source", "text"
@@ -162,46 +107,51 @@ def q_manifest(d):
                 "nll", "keep")
     )
 
-from weaviate_txtai_spark.cache import cache_scope
-def run(fn, inp):
-    ts = []
-    for _ in range(2):
-        with cache_scope():
-            t = time.time(); n = fn(inp).count(); ts.append(time.time()-t)
-    return min(ts), n
 
-# each case: three (fn, input) pairs — per-scale fns let parameters
-# that must scale with the corpus (IVF nlist) do so honestly
-def _same(fn, i1, i2, i4):
-    return [(fn, i1), (fn, i2), (fn, i4)]
+def main() -> None:
+    from weaviate_txtai_spark.sources.tables import load_table
 
-cases = {
-    "customer_affinity": _same(q_affinity, cp1, cp2, cp4),
-    "dedup_prefix_jaccard": _same(q_prefix_jaccard, docs1, docs2, docs4),
-    "source_drift_jsd": _same(q_jsd, docs1, docs2, docs4),
-    "threshold_join_bucketed": _same(q_threshold_bucketed, emb1, emb2, emb4),
-    "docs_heaps_law": _same(q_heaps, docs1, docs2, docs4),
-    "customer_linkage_em": _same(q_linkage_em, cust1, cust2, cust4),
-    # r11: the remaining top-10 heavy-bench families
-    "sim_join_ivfpq": [
-        (q_simjoin_pq(16), emb1), (q_simjoin_pq(32), emb2),
-        (q_simjoin_pq(64), emb4),
-    ],
-    "doc_centrality": _same(q_centrality, emb1, emb2, emb4),
-    "order_scc": _same(q_scc, ord1, ord2, ord4),
-    "pretraining_manifest": _same(q_manifest, docs1, docs2, docs4),
-    "curation_run": _same(q_curation, docs1, docs2, docs4),
-}
-out = {}
-for name, triple in cases.items():
-    (f1, i1), (f2, i2), (f4, i4) = triple
-    t1, n1 = run(f1, i1); t2, n2 = run(f2, i2); t4, n4 = run(f4, i4)
-    out[name] = dict(t_1x=round(t1,3), t_2x=round(t2,3), t_4x=round(t4,3),
-                     r21=round(t2/t1,2), r42=round(t4/t2,2),
-                     rows=(n1,n2,n4))
-    print(name, out[name], flush=True)
-print(json.dumps(out))
-from scale_check import merge_write
-path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_CHECK.json")
-merge_write(path, {"tail_4x": out})
-print("merged into", path)
+    spark = spark_session("tail4x")
+    docs1 = load_table(spark, SF_DIR, "documents")
+    emb1 = load_table(spark, SF_DIR, "embeddings")
+    li1 = load_table(spark, SF_DIR, "lineitem")
+    ord1 = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
+    cp1 = cust_part(load_table(spark, SF_DIR, "orders"), li1)
+    cust1 = load_table(spark, SF_DIR, "customer")
+
+    def scales(fn, base, clone):
+        # (fn, input) at 1x, 2x and 4x
+        return [(fn, grown(base, clone, c)) for c in (1, 2, 4)]
+
+    cases = {
+        "customer_affinity": scales(q_affinity, cp1, cust_part_clone),
+        "dedup_prefix_jaccard": scales(q_prefix_jaccard, docs1, doc_clone),
+        "source_drift_jsd": scales(q_jsd, docs1, doc_clone),
+        "threshold_join_bucketed": scales(q_threshold_bucketed, emb1, emb_clone),
+        "docs_heaps_law": scales(q_heaps, docs1, doc_clone),
+        "customer_linkage_em": scales(q_linkage_em, cust1, customer_clone),
+        # r11: the remaining top-10 heavy-bench families; IVF nlist
+        # scales with the corpus (nlist ∝ corpus, constant cell size)
+        "sim_join_ivfpq": [
+            (q_simjoin_pq(16 * c), grown(emb1, emb_clone, c)) for c in (1, 2, 4)
+        ],
+        "doc_centrality": scales(q_centrality, emb1, emb_clone),
+        "order_scc": scales(q_scc, ord1, orders_clone),
+        "pretraining_manifest": scales(q_manifest, docs1, doc_clone),
+        "curation_run": scales(q_curation, docs1, doc_clone),
+    }
+    out = {}
+    for name, triple in cases.items():
+        (t1, n1), (t2, n2), (t4, n4) = (run(spark, f, i) for f, i in triple)
+        out[name] = dict(t_1x=round(t1, 3), t_2x=round(t2, 3), t_4x=round(t4, 3),
+                         r21=round(t2 / t1, 2), r42=round(t4 / t2, 2),
+                         rows=(n1, n2, n4))
+        print(name, out[name], flush=True)
+    print(json.dumps(out))
+    merge_write(SCALE_CHECK, {"tail_4x": out})
+    print("merged into", SCALE_CHECK)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

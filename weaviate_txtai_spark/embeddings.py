@@ -281,12 +281,17 @@ class Embeddings:
             self._ann_mutations = self._mutations
         return self._ann
 
+    def _setting(self, key: str, default: int) -> int:
+        """One setting of the configured ANN backend
+        (``config[backend][key]``). An explicit None — in the dict, or
+        kept by save() through JSON — reads as missing: ``default``."""
+        value = (self.config.get(self.backend) or {}).get(key)
+        return default if value is None else int(value)
+
     def _build_ivf(self, n: int):
         from weaviate_txtai_spark.operators.ann import IVFIndex
 
-        cfg = dict(self.config.get("ivf") or {})
-        nlist = int(cfg.get("nlist", max(4, n // 128)))
-        nlist = max(1, min(nlist, n))
+        nlist = max(1, min(self._setting("nlist", max(4, n // 128)), n))
         return IVFIndex.build(
             self._df, nlist=nlist, id_col="docid", vector_col="vector"
         )
@@ -296,7 +301,6 @@ class Embeddings:
         indexes stay trainable."""
         from weaviate_txtai_spark.operators.ivfpq import IVFPQIndex
 
-        cfg = dict(self.config.get("ivfpq") or {})
         # the ivfpq score contract is the unit-vector identity
         # cos = 1 − d²/2; a pluggable encoder that does NOT L2-normalize
         # would silently get wrong scores (exact/ivf backends rank true
@@ -324,15 +328,14 @@ class Embeddings:
                 f"vector with |norm² - 1| = {worst:.3g} — normalize in "
                 "the encoder or use backend='exact'/'ivf'"
             )
-        nlist = max(1, min(int(cfg.get("nlist", max(4, n // 256))), n))
-        m = int(cfg.get("m", 8))
-        k = max(2, min(int(cfg.get("k", 16)), n))
+        nlist = max(1, min(self._setting("nlist", max(4, n // 256)), n))
+        k = max(2, min(self._setting("k", 16), n))
         return IVFPQIndex.build(
             self._df,
             nlist=nlist,
-            m=m,
+            m=self._setting("m", 8),
             k_pq=k,
-            pq_iters=int(cfg.get("iters", 1)),
+            pq_iters=self._setting("iters", 1),
             id_col="docid",
             vector_col="vector",
         )
@@ -365,24 +368,22 @@ class Embeddings:
             # ADC shortlist + exact L2 re-rank, then the L2→cosine
             # identity for unit vectors (encoders L2-normalize, so
             # cos = 1 − d²/2 EXACTLY) gives the facade's score contract.
-            # `or`-defaults: an explicit None in the config dict must
-            # fall back like a missing key, not crash in int(None)
-            cfg = dict(self.config.get("ivfpq") or {})
+            # A 0 reads as the default too: nprobe 0 probes no cell and
+            # shortlist 0 skips the exact re-rank (ADC scores).
             hits = self._ann_index().search(
                 qrows,
                 limit + 8,
-                nprobe=int(cfg.get("nprobe") or 4),
-                shortlist=int(cfg.get("shortlist") or 8),
+                nprobe=self._setting("nprobe", 4) or 4,
+                shortlist=self._setting("shortlist", 8) or 8,
             ).select(
                 F.col("query_id").cast("int").alias("qid"),
                 "docid",
                 (F.lit(1.0) - F.col("dist") / F.lit(2.0)).alias("score"),
             )
         else:
-            nprobe = int(dict(self.config.get("ivf") or {}).get("nprobe", 4))
             qdf = self.spark.createDataFrame(qrows, "qid int, qv array<float>")
             hits = self._ann_index().search(
-                qdf, limit + 8, nprobe=nprobe,
+                qdf, limit + 8, nprobe=self._setting("nprobe", 4),
                 query_id_col="qid", query_vector_col="qv",
             ).select("qid", "docid", "score")
         w = Window.partitionBy("qid").orderBy(

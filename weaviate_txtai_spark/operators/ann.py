@@ -30,6 +30,43 @@ from weaviate_txtai_spark.functions.vector import cosine_sim
 from weaviate_txtai_spark.operators.topk import topk_rows
 
 
+def probe_rank(Q, C, nprobe: int, *, metric: str, round_decimals: int = 9):
+    """The probe rule of every IVF/IVF-PQ probe: for each query row of
+    ``Q`` (n, dim) the row indices into ``C`` (nlist, dim) of its
+    ``nprobe`` nearest centroids, ranked by (key rounded to
+    ``round_decimals``, row ASC). Callers sort ``C`` by cell id, so ties
+    go to the lowest cell. ``metric``: 'l2' (squared L2 in its expanded
+    GEMM form, ascending — the IVF-PQ probe) or 'cosine' (descending —
+    the IVF probe). Shape (n, min(nprobe, nlist)).
+
+    Shared by the Arrow kernel of ``probe_cells_gemm`` and the driver
+    batch of ``IVFPQIndex.search``, so the two pick the same cells even
+    where an unrounded distance would break a 9-dp tie the other way;
+    ``probe_cells_expr`` is its DataFrame-expression twin."""
+    import numpy as np
+
+    if metric == "l2":
+        # expanded form: one GEMM; clip the fp-cancellation dip
+        d = np.clip(
+            (Q * Q).sum(axis=1, keepdims=True)
+            - 2.0 * (Q @ C.T)
+            + (C * C).sum(axis=1)[None, :],
+            0.0,
+            None,
+        )
+        key = np.round(d, round_decimals)
+    elif metric == "cosine":
+        qn = np.linalg.norm(Q, axis=1, keepdims=True)
+        qn[qn == 0.0] = 1.0
+        cn = np.linalg.norm(C, axis=1, keepdims=True)
+        cn[cn == 0.0] = 1.0
+        key = -np.round((Q / qn) @ (C / cn).T, round_decimals)
+    else:
+        raise ValueError(f"probe_rank: unknown metric {metric!r}")
+    # stable: equal keys keep row (= cell) order
+    return np.argsort(key, axis=1, kind="stable")[:, :nprobe]
+
+
 def probe_cells_gemm(
     query_df: DataFrame,
     centroids: list[tuple[int, list]],
@@ -45,21 +82,15 @@ def probe_cells_gemm(
     (array<double>), ``cell`` (int).
 
     Replaces the crossJoin(centroids) + interpreted zip_with/aggregate
-    fold + window plan (VERDICT r5 perf note): that plan evaluates a
-    per-element HOF over Q × nlist rows AND shuffles them for the
-    row_number window — and nlist grows ∝ √N, so at 100× the fold is
-    the same interpreted-HOF-on-a-large-frame pattern banned elsewhere
-    (NOTES.md r4). Here each Arrow batch scores (batch × dim) @
-    (dim × nlist) with one BLAS call — centroids are closure state,
-    already bounded driver model state — and emits batch × nprobe rows
-    directly: NO shuffle at all, where the window plan shuffled
-    Q × nlist rows.
-
-    Tie-break parity with the expr twin: distances round to
-    ``round_decimals`` then (metric order, cell ASC) via lexsort —
-    the same rule the window's (dist ASC | sim DESC, cell ASC) applies.
-    ``metric``: 'l2' (squared L2, ascending — the IVF-PQ probe) or
-    'cosine' (descending — the IVF probe).
+    fold + window plan of ``probe_cells_expr`` (VERDICT r5 perf note):
+    that plan evaluates a per-element HOF over Q × nlist rows AND
+    shuffles them for the row_number window — and nlist grows ∝ √N, so
+    at 100× the fold is the same interpreted-HOF-on-a-large-frame
+    pattern banned elsewhere (NOTES.md r4). Here each Arrow batch scores
+    (batch × dim) @ (dim × nlist) with one BLAS call (``probe_rank``) —
+    centroids are closure state, already bounded driver model state —
+    and emits batch × nprobe rows directly: NO shuffle at all, where the
+    window plan shuffled Q × nlist rows.
     """
     import numpy as np
     import pandas as pd
@@ -79,11 +110,6 @@ def probe_cells_gemm(
     cents = sorted((int(c), list(v)) for c, v in centroids)
     cell_ids = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (nlist, dim)
-    if metric == "cosine":
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        cn[cn == 0.0] = 1.0
-        Cn = C / cn
-    csq = (C * C).sum(axis=1)  # (nlist,)
     np_take = min(nprobe, len(cents))
 
     qid_type = query_df.schema[query_id_col].dataType
@@ -100,24 +126,9 @@ def probe_cells_gemm(
             if pdf.empty:
                 continue
             Q = np.asarray(list(pdf[query_vector_col]), dtype=np.float64)
-            if metric == "l2":
-                # expanded form: one GEMM; clip the fp-cancellation dip
-                d = np.clip(
-                    (Q * Q).sum(axis=1, keepdims=True)
-                    - 2.0 * (Q @ C.T)
-                    + csq[None, :],
-                    0.0,
-                    None,
-                )
-                key = np.round(d, round_decimals)  # ascending
-            else:
-                qn = np.linalg.norm(Q, axis=1, keepdims=True)
-                qn[qn == 0.0] = 1.0
-                key = -np.round((Q / qn) @ Cn.T, round_decimals)  # asc(-sim)
-            # per query: (key ASC, cell ASC) — full lexsort over nlist is
-            # fine (nlist ≪ corpus; this is per-batch driver-free work)
-            order = np.lexsort((np.broadcast_to(cell_ids, key.shape), key),
-                               axis=1)[:, :np_take]
+            order = probe_rank(
+                Q, C, np_take, metric=metric, round_decimals=round_decimals
+            )
             qids = pdf[query_id_col].to_numpy()
             yield pd.DataFrame(
                 {
@@ -132,6 +143,83 @@ def probe_cells_gemm(
         F.col(query_vector_col).cast("array<double>").alias(query_vector_col),
     )
     return src.mapInPandas(probe, schema=out_schema)
+
+
+def probe_cells_expr(
+    query_df: DataFrame,
+    centroids: list[tuple[int, list]],
+    nprobe: int,
+    *,
+    metric: str,
+    query_id_col: str = "query_id",
+    query_vector_col: str = "query_vector",
+) -> DataFrame:
+    """The reference twin of ``probe_cells_gemm``: same rule, same
+    output columns, as DataFrame expressions — queries × nlist
+    centroids (tiny broadcast crossJoin), an interpreted fold per pair,
+    the key rounded to 9 dp BEFORE the (key, cell ASC)
+    tie-break (unrounded, two centroids within ~1e-9 could rank
+    differently across the twins — ADVICE r6), then a row_number window
+    per query. Shuffles Q × nlist rows: the tests' reference, not a
+    production path."""
+    spark = query_df.sparkSession
+    cent = spark.createDataFrame(
+        [(int(c), [float(x) for x in v]) for c, v in centroids],
+        "cell int, __cent array<double>",
+    )
+    if metric == "l2":
+        key = F.aggregate(
+            F.zip_with("__qv", "__cent", lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        order = F.asc("__key")
+    elif metric == "cosine":
+        key = cosine_sim("__qv", "__cent")
+        order = F.desc("__key")
+    else:
+        raise ValueError(f"probe_cells_expr: unknown metric {metric!r}")
+    w = Window.partitionBy("__qid").orderBy(order, F.asc("cell"))
+    return (
+        query_df.select(
+            F.col(query_id_col).alias("__qid"),
+            F.col(query_vector_col).cast("array<double>").alias("__qv"),
+        )
+        .crossJoin(F.broadcast(cent))
+        .withColumn("__key", F.round(key, 9))
+        .withColumn("__pr", F.row_number().over(w))
+        .filter(F.col("__pr") <= nprobe)
+        .select("__qid", "__qv", "cell")
+    )
+
+
+def probe_cells(
+    query_df: DataFrame,
+    centroids: list[tuple[int, list]],
+    nprobe: int,
+    *,
+    strategy: str,
+    metric: str,
+    query_id_col: str,
+    query_vector_col: str,
+) -> DataFrame:
+    """The probe step of ``IVFIndex.search`` and ``IVFPQIndex.search_df``:
+    ``strategy`` 'gemm' is the map-only Arrow GEMM probe (no crossJoin,
+    no window shuffle — the expr twin shuffles Q × nlist rows and
+    evaluates an interpreted HOF per pair, and nlist ∝ √N), 'expr' its
+    reference twin. Both rank by the ``probe_rank`` rule."""
+    twins = {"gemm": probe_cells_gemm, "expr": probe_cells_expr}
+    probe = twins.get(strategy)
+    if probe is None:
+        raise ValueError(f"unknown probe_strategy {strategy!r}")
+    return probe(
+        query_df,
+        centroids,
+        nprobe,
+        metric=metric,
+        query_id_col=query_id_col,
+        query_vector_col=query_vector_col,
+    )
 
 
 def _train_centroids_sampled(
@@ -447,46 +535,15 @@ class IVFIndex:
         # same logical key in different partitions and the cogroup drops
         # most groups (observed: exactly ~nprobe/nlist of queries kept)
         cell_type = self.assigned.schema["cell"].dataType.simpleString()
-        if probe_strategy == "gemm":
-            # map-only Arrow GEMM probe: no crossJoin, no window shuffle —
-            # the expr twin below shuffles Q × nlist rows and evaluates an
-            # interpreted HOF per pair, and nlist ∝ √N (VERDICT r5 item 4)
-            probes = probe_cells_gemm(
-                query_df,
-                self.centroids,
-                nprobe,
-                metric="cosine",
-                query_id_col=query_id_col,
-                query_vector_col=query_vector_col,
-            ).withColumn("cell", F.col("cell").cast(cell_type))
-        elif probe_strategy == "expr":
-            cent = spark.createDataFrame(
-                self.centroids, ["cell", "centroid"]
-            ).withColumn("cell", F.col("cell").cast(cell_type))
-            q = query_df.select(
-                F.col(query_id_col).alias("__qid"),
-                F.col(query_vector_col).alias("__qv"),
-            )
-            # tiny crossJoin: queries × nlist centroids
-            wprobe = Window.partitionBy("__qid").orderBy(
-                F.desc("__csim"), F.asc("cell")
-            )
-            probes = (
-                q.crossJoin(F.broadcast(cent))
-                # round to 9 decimals BEFORE the (sim DESC, cell ASC)
-                # tie-break so the expr twin orders on the same key as
-                # probe_cells_gemm (which rounds its BLAS sims to 9) —
-                # unrounded, two centroids within ~1e-9 could rank
-                # differently across strategies (ADVICE r6)
-                .withColumn("__csim", F.round(cosine_sim("__qv", "centroid"), 9))
-                .withColumn("__pr", F.row_number().over(wprobe))
-                .filter(F.col("__pr") <= nprobe)
-                .select("__qid", "__qv", "cell")
-            )
-        else:
-            raise ValueError(
-                f"IVFIndex.search: unknown probe_strategy {probe_strategy!r}"
-            )
+        probes = probe_cells(
+            query_df,
+            self.centroids,
+            nprobe,
+            strategy=probe_strategy,
+            metric="cosine",
+            query_id_col=query_id_col,
+            query_vector_col=query_vector_col,
+        ).withColumn("cell", F.col("cell").cast(cell_type))
         if broadcast_queries:
             # The union of probed cells is collected driver-side (≤ nlist
             # ints, one tiny job over queries × centroids) and applied as a

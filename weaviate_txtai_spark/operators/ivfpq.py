@@ -18,9 +18,9 @@ nprobe/nlist of the data, and every stage is a DataFrame op:
 - **build**: IVF build (one shuffle to cell layout) + a broadcast
   centroid join for residuals (map-only) + m subspace k-means on the
   residual column (driver state k×dim floats) + map-only encoding.
-- **search**: probe fan-out (tiny crossJoin) → LUT per (query, cell)
-  computed driver-side from the query batch — bounded by the same
-  batch-query contract as ``knn_topk``'s broadcast path — → ADC
+- **search**: probe (``ann.probe_rank``, the rule every probe applies)
+  → LUT per (query, cell) computed driver-side from the query batch —
+  bounded by the same batch-query contract as ``knn_topk``'s broadcast path — → ADC
   distances from a shuffle-free Arrow gather kernel (LUTs in the
   closure; the interpreted-expr fold twin is kept as the
   oracle/exactness path — same float64 op sequence, equal up to the
@@ -42,7 +42,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from weaviate_txtai_spark.operators.ann import IVFIndex
+from weaviate_txtai_spark.operators.ann import (
+    IVFIndex,
+    probe_cells,
+    probe_rank,
+)
 from weaviate_txtai_spark.operators.pq import (
     PQModel,
     adc_gather,
@@ -376,19 +380,17 @@ class IVFPQIndex:
         cents = sorted(self.ivf.centroids)
         cmat = np.asarray([c for _, c in cents], dtype=np.float64)
         cids = [cid for cid, _ in cents]
-        nprobe = min(nprobe, len(cids))
 
         # Build one LUT literal per (query, probed cell): map cell ->
         # array<array<double>> keyed into a single CASE via the cell
         # column. Driver cost: Q × nprobe × m × k floats — the batch
         # contract bounds Q (≲ 10^3), nprobe×m×k ≲ 10^4.
+        qmat = np.asarray([list(qv) for _, qv in queries], dtype=np.float64)
+        # probe by L2 to the coarse centroids under the rule search_df's
+        # probes apply (9-dp rounded key, ties to the lowest cell id)
+        probed = probe_rank(qmat, cmat, nprobe, metric="l2")
         lut_rows = []  # (qid, cell, lut)
-        for qid, qv in queries:
-            q = np.asarray(list(qv), dtype=np.float64)
-            # probe by L2 distance to coarse centroids (deterministic
-            # ties to lowest cell id via lexsort)
-            d = ((cmat - q) ** 2).sum(axis=1)
-            order = np.lexsort((np.asarray(cids), d))[:nprobe]
+        for (qid, _), q, order in zip(queries, qmat, probed):
             for idx in order:
                 res = (q - cmat[idx]).tolist()
                 lut_rows.append(
@@ -578,59 +580,17 @@ class IVFPQIndex:
             )
 
         cents = sorted(self.ivf.centroids)
-        if probe_strategy == "gemm":
-            # map-only Arrow GEMM probe (VERDICT r5 item 4): the expr twin
-            # below shuffles Q × nlist rows through a window and evaluates
-            # an interpreted zip_with/aggregate fold per pair — and nlist
-            # grows ∝ √N. Same (dist ASC, cell ASC) rule after rounding.
-            from weaviate_txtai_spark.operators.ann import probe_cells_gemm
-
-            probes = probe_cells_gemm(
-                query_df,
-                cents,
-                nprobe,
-                metric="l2",
-                query_id_col=query_id_col,
-                query_vector_col=query_vector_col,
-            )
-        elif probe_strategy == "expr":
-            # probe fan-out: queries × nlist centroids (tiny broadcast
-            # crossJoin), window top-nprobe by (L2 asc, cell asc) — the
-            # same deterministic rule the driver-batch path uses (lexsort)
-            cent = spark.createDataFrame(
-                [(int(c), [float(x) for x in v]) for c, v in cents],
-                "cell int, __cent array<double>",
-            )
-            l2 = F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("__qv"),
-                        F.col("__cent"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                9,
-            )
-            wprobe = Window.partitionBy("__qid").orderBy(
-                F.asc("__cd"), F.asc("cell")
-            )
-            probes = (
-                query_df.select(
-                    F.col(query_id_col).alias("__qid"),
-                    F.col(query_vector_col).cast("array<double>").alias("__qv"),
-                )
-                .crossJoin(F.broadcast(cent))
-                .withColumn("__cd", l2)
-                .withColumn("__pr", F.row_number().over(wprobe))
-                .filter(F.col("__pr") <= min(nprobe, len(cents)))
-                .select("__qid", "__qv", "cell")
-            )
-        else:
-            raise ValueError(
-                f"search_df: unknown probe_strategy {probe_strategy!r}"
-            )
+        # both strategies rank (round(L2, 9) ASC, cell ASC), the rule
+        # the driver-batch ``search`` applies through ``probe_rank``
+        probes = probe_cells(
+            query_df,
+            cents,
+            nprobe,
+            strategy=probe_strategy,
+            metric="l2",
+            query_id_col=query_id_col,
+            query_vector_col=query_vector_col,
+        )
 
         # ---- cogrouped ADC: salt the cell key so one group never holds
         # a whole cell; EXPLICIT partition count (AQE coalesces
