@@ -566,7 +566,6 @@ def test_ivfpq_backend_mutation_invalidates(spark):
     [
         ("ivf", ("nlist", "nprobe"), None),
         ("ivfpq", ("nlist", "m", "k", "iters", "nprobe", "shortlist"), None),
-        ("ivfpq", ("nprobe", "shortlist"), 0),
     ],
 )
 def test_none_backend_settings_search_like_the_defaults(
@@ -574,9 +573,8 @@ def test_none_backend_settings_search_like_the_defaults(
 ):
     """An explicit None for a backend setting (as save() keeps it
     through JSON) reads as missing: a config with every setting None
-    searches exactly like the default config. So does an IVF-PQ
-    nprobe/shortlist of 0, which would otherwise probe no cell and skip
-    the exact re-rank."""
+    searches exactly like the default config. (A 0 is rejected at
+    construction: test_ivfpq.py::test_knob_below_one_raises_naming_it.)"""
     docs = _docs(40)
     out = []
     for cfg in (

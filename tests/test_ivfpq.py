@@ -4,6 +4,7 @@ full shortlist, recall in production mode."""
 import pytest
 from pyspark.sql import functions as F
 
+from weaviate_txtai_spark.embeddings import Embeddings
 from weaviate_txtai_spark.operators.ivfpq import IVFPQIndex, _with_residual
 from weaviate_txtai_spark.operators.topk import knn_topk
 from weaviate_txtai_spark.sources.tables import load_table
@@ -409,3 +410,64 @@ def test_driver_and_df_search_probe_by_one_rule(spark):
         for r in idx.search_df(qdf, 2, **kw).collect()
     )
     assert len(batch) == 2 and batch == dfres
+
+
+@pytest.mark.parametrize(
+    "target, knobs",
+    [
+        ("Embeddings-ivf", {"nprobe": 0}),
+        ("Embeddings-ivfpq", {"nprobe": 0}),
+        ("Embeddings-ivfpq", {"shortlist": 0}),
+        ("Embeddings-ivfpq", {"shortlist": -1}),
+        ("Embeddings-ivfpq", {"nlist": 0}),
+        ("Embeddings-ivfpq", {"iters": -1}),
+        ("IVFIndex.search", {"nprobe": 0}),
+        ("IVFPQIndex.search", {"nprobe": -1}),
+        ("IVFPQIndex.search", {"shortlist": 0}),
+        ("IVFPQIndex.search_df", {"nprobe": 0}),
+        ("IVFPQIndex.search_df", {"shortlist": -1}),
+    ],
+    ids=lambda v: v if isinstance(v, str) else "-".join(
+        f"{k}{x}" for k, x in v.items()
+    ),
+)
+def test_knob_below_one_raises_naming_it(spark, index, emb, target, knobs):
+    """One rule for non-positive settings: an Embeddings backend
+    setting below 1 (iters below 0) and an nprobe/shortlist below 1 on
+    any IVF/IVF-PQ search raise ValueError naming the key, before any
+    Spark work. Unchecked, nprobe 0 crashed the probe kernel, shortlist
+    -1 returned no hits and nprobe -1 probed nlist - 1 cells."""
+    key = next(iter(knobs))
+    q = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
+    qdf = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vector"),
+    )
+    calls = {
+        "Embeddings-ivf": lambda: Embeddings(
+            spark, config={"backend": "ivf", "ivf": knobs}),
+        "Embeddings-ivfpq": lambda: Embeddings(
+            spark, config={"backend": "ivfpq", "ivfpq": knobs}),
+        "IVFIndex.search": lambda: index.ivf.search(qdf, 3, **knobs),
+        "IVFPQIndex.search": lambda: index.search([(0, q)], 3, **knobs),
+        "IVFPQIndex.search_df": lambda: index.search_df(qdf, 3, **knobs),
+    }
+    with pytest.raises(ValueError, match=key):
+        calls[target]()
+
+
+def test_append_assigns_each_new_batch_once(index, emb, monkeypatch):
+    """IVFPQIndex.append builds the float layout and the codes table
+    from ONE cell assignment of the new batch."""
+    from weaviate_txtai_spark.operators import kmeans
+
+    calls = []
+    assign = kmeans.assign_clusters
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return assign(*args, **kwargs)
+
+    monkeypatch.setattr(kmeans, "assign_clusters", counting)
+    index.append(emb.limit(3).withColumn("vec_id", F.col("vec_id") + 10**6))
+    assert len(calls) == 1

@@ -35,19 +35,19 @@ _R14_WINDOW = {
     "knn_topk", "knn_batch", "streaming_ingest", "full_scan",
     "docid_lookup", "scan_limit", "vector_delete", "vector_count",
     "vector_upsert", "similarity_brute", "similar_sql", "agg_stats_txtai",
-    "docs_unigram_nll", "docs_bigram_nll", "docs_trigram_jm_nll",
+    "docs_unigram_nll", "docs_bigram_nll",
     "lineitem_spearman", "dedup_ngram_jaccard", "tfidf_top_terms",
     "customer_linkage_em", "customer_linkage_fs", "part_pareto_frontier",
     "part_also_bought", "events_sequence_pairs", "supplier_name_matches",
     "retrieval_eval", "docs_heaps_law", "docs_quality_classifier",
-    "events_range_join", "customer_supplier_hits",
     "order_chain_components",
     "order_scc", "doc_centrality", "dedup_groups", "dedup_survivors",
     "semantic_dedup_survivors", "pretraining_manifest", "curation_run",
     "bm25_topk", "qlm_topk", "dedup_minhash", "dedup_incremental",
     "basket_rules", "source_shard_apportion",
     "knn_batch_gemm", "pq_knn", "ivfpq_knn", "sim_join_ivf",
-    "sim_join_ivfpq", "purchase_isotonic_fit", "lineitem_kendall_tau",
+    "sim_join_ivfpq", "pq_knn_rerank", "binary_hamming_rerank",
+    "opq_knn_rerank", "ivfopq_knn", "ivfpq_append_search",
 }
 
 

@@ -288,3 +288,33 @@ def test_topk_rows_matches_full_sort(rows):
     key, ids, k = rows
     got = topk_rows(key, ids, k)
     assert got.tolist() == np.lexsort((ids, key))[:k].tolist()
+
+
+def test_exact_dist_equals_the_expression_folds(spark, sf_dir):
+    """The exact re-rank kernel equals, bit for bit and before any
+    rounding, the squared-L2 ``aggregate`` fold (metric 'l2') and
+    ``cosine_sim`` (metric 'cosine') over the sf0.01 embeddings, for
+    three query rows and the zero vector."""
+    import os
+
+    from weaviate_txtai_spark.functions.vector import cosine_sim
+    from weaviate_txtai_spark.operators.topk import exact_dist
+
+    emb = load_table(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "embeddings"
+    )
+    rows = emb.orderBy("vec_id").collect()
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    for q in [list(X[0]), list(X[7]), list(X[-1]), [0.0] * X.shape[1]]:
+        qlit = F.array(*[F.lit(float(v)) for v in q])
+        sq = F.aggregate(
+            F.zip_with(F.col("embedding").cast("array<double>"), qlit,
+                       lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, v: acc + v,
+        )
+        want = emb.orderBy("vec_id").select(
+            sq.alias("l2"), cosine_sim("embedding", qlit).alias("cos")
+        ).collect()
+        Q = np.tile(np.asarray(q, dtype=np.float64), (len(X), 1))
+        assert exact_dist(X, Q, "l2").tolist() == [r["l2"] for r in want]
+        assert exact_dist(X, Q, "cosine").tolist() == [r["cos"] for r in want]

@@ -63,11 +63,7 @@ _WHITELIST = {
     "vector_upsert": "single-query verification rank over one query's"
     " candidates; batch path partitions by query_id",
     "pq_knn": "single-query ADC top-k; batch twin ivfpq partitions",
-    "pq_knn_rerank": "single-query rerank window over k candidates",
     "binary_hamming_knn": "single-query hamming top-k",
-    "binary_hamming_rerank": "single-query rerank over the hamming"
-    " shortlist (shortlist-bounded rows)",
-    "opq_knn_rerank": "single-query OPQ rerank over k candidates",
     "embedding_outliers": "final top-N outlier report (N=10); the"
     " scoring itself is partitioned - only the tiny report sorts",
     "hybrid_rrf": "rank fusion over two top-k candidate lists"

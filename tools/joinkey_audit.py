@@ -88,8 +88,9 @@ UPSTREAM = {
     "repeated_passages": "window_doc_pairs",
     "winnow_pairs": "winnow_fingerprints guards ids; fp derived hash",
     "twonn_intrinsic_dim": "knn_graph", "knn_label_loo_accuracy": "knn_graph",
-    "adc_topk_rerank": "adc_topk excludes NULL ids (r13 fix)",
-    "hamming_topk_rerank": "hamming_topk excludes NULL ids (r13 fix)",
+    "exact_rerank": "every caller's shortlist is NULL-id-free (adc_topk,"
+                    " hamming_topk, opq_topk, IVF-PQ codes) and keyed by"
+                    " its own non-NULL __qid",
     "IVFPQIndex.search": "codes/assigned NULL-id-free post r13 build fix"
                          " + query ids guarded in-function",
     "IVFIndex.search": "assigned NULL-id-free post r13 build fix"

@@ -83,8 +83,11 @@ TIEBROKEN_REVIEWED = {
     "waterfill_allocation": "asc(__a) + asc(__k) — __k is the key col",
     "IVFIndex.search": "asc(id_col) trailing; probe window over the "
                        "distinct-cell domain",
-    "IVFPQIndex.search": "asc(self.id_col) trailing on both windows",
+    "IVFPQIndex.search": "asc(self.id_col) trailing",
     "IVFPQIndex.search_df": "asc(id_col); cell window over cell domain",
+    "probe_cells_expr": "asc(cell) trailing: one row per (query, "
+                        "centroid), cell ids unique in the centroid list",
+    "exact_rerank": "asc(id_col) trailing in the per-__qid window",
     "ranking_metrics": "rank_col unique per query is the input "
                        "contract of a ranking (docstring)",
 }

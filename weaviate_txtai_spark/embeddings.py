@@ -93,9 +93,6 @@ class Embeddings:
         encoder: HashingEncoder | None = None,
         config: dict | None = None,
     ):
-        from weaviate_txtai_spark.ship import ensure_shipped
-
-        ensure_shipped(spark)
         self.spark = spark
         self.encoder = encoder or HashingEncoder()
         # txtai-style config dict (examples/01_simple.ipynb cell 21:
@@ -119,6 +116,19 @@ class Embeddings:
         self.backend = str(self.config.get("backend", "exact"))
         if self.backend not in ("exact", "ivf", "ivfpq"):
             raise ValueError(f"Embeddings: unknown backend {self.backend!r}")
+        # every setting is a count of at least 1 (nprobe 0 probes no
+        # cell, shortlist 0 keeps no candidate); only iters may be 0,
+        # the exactness mode — rejected here, before any work
+        for key, value in (self.config.get(self.backend) or {}).items():
+            floor = 0 if key == "iters" else 1
+            if value is not None and int(value) < floor:
+                raise ValueError(
+                    f"Embeddings: config[{self.backend!r}][{key!r}] must be "
+                    f"at least {floor}, got {value!r}"
+                )
+        from weaviate_txtai_spark.ship import ensure_shipped
+
+        ensure_shipped(spark)
         self._ann = None          # cached IVF or IVF-PQ index
         self._ann_mutations = -1  # mutation counter it was built at
         self._df: DataFrame | None = None
@@ -368,13 +378,11 @@ class Embeddings:
             # ADC shortlist + exact L2 re-rank, then the L2→cosine
             # identity for unit vectors (encoders L2-normalize, so
             # cos = 1 − d²/2 EXACTLY) gives the facade's score contract.
-            # A 0 reads as the default too: nprobe 0 probes no cell and
-            # shortlist 0 skips the exact re-rank (ADC scores).
             hits = self._ann_index().search(
                 qrows,
                 limit + 8,
-                nprobe=self._setting("nprobe", 4) or 4,
-                shortlist=self._setting("shortlist", 8) or 8,
+                nprobe=self._setting("nprobe", 4),
+                shortlist=self._setting("shortlist", 8),
             ).select(
                 F.col("query_id").cast("int").alias("qid"),
                 "docid",

@@ -14,9 +14,12 @@ double so results match a double-precision oracle (DuckDB
 
 For anything pair-heavy the Arrow kernels are the production path and
 exist for every tier: ``operators/topk.py`` ``knn_topk_gemm`` (batch
-kNN), the cogrouped scorers in ``operators/ann.py``/``ivfpq.py``, and
-the per-batch gather kernel in ``operators/pq.py``; these exprs remain
-the canonical, oracle-matching definition.
+kNN), the cogrouped scorers in ``operators/ann.py``/``ivfpq.py``, the
+per-batch gather kernel in ``operators/pq.py``, and the exact re-rank
+kernel ``topk.exact_dist`` behind every shortlist search; these exprs
+remain the canonical, oracle-matching definition. ``exact_dist``
+reproduces the squared-L2 fold and :func:`cosine_sim` bit for bit: it
+sums over the dimensions in the same left-to-right order from 0.0.
 """
 
 from __future__ import annotations

@@ -30,11 +30,25 @@ from weaviate_txtai_spark.functions.vector import cosine_sim
 from weaviate_txtai_spark.operators.topk import topk_rows
 
 
-def probe_rank(Q, C, nprobe: int, *, metric: str, round_decimals: int = 9):
+# decimal places of the probe key in every probe twin (see probe_cells_expr)
+PROBE_DECIMALS = 9
+
+
+def require_positive(caller: str, **knobs) -> None:
+    """The one rule for search knobs (``nprobe``, ``shortlist``): a
+    value below 1 raises ValueError naming the knob, before any work —
+    0 would probe no cell or keep no candidate, and a negative slice
+    end would silently probe nlist − 1 cells. None (unset) passes."""
+    for key, value in knobs.items():
+        if value is not None and value < 1:
+            raise ValueError(f"{caller}: {key} must be at least 1, got {value!r}")
+
+
+def probe_rank(Q, C, nprobe: int, *, metric: str):
     """The probe rule of every IVF/IVF-PQ probe: for each query row of
     ``Q`` (n, dim) the row indices into ``C`` (nlist, dim) of its
     ``nprobe`` nearest centroids, ranked by (key rounded to
-    ``round_decimals``, row ASC). Callers sort ``C`` by cell id, so ties
+    ``PROBE_DECIMALS``, row ASC). Callers sort ``C`` by cell id, so ties
     go to the lowest cell. ``metric``: 'l2' (squared L2 in its expanded
     GEMM form, ascending — the IVF-PQ probe) or 'cosine' (descending —
     the IVF probe). Shape (n, min(nprobe, nlist)).
@@ -54,13 +68,13 @@ def probe_rank(Q, C, nprobe: int, *, metric: str, round_decimals: int = 9):
             0.0,
             None,
         )
-        key = np.round(d, round_decimals)
+        key = np.round(d, PROBE_DECIMALS)
     elif metric == "cosine":
         qn = np.linalg.norm(Q, axis=1, keepdims=True)
         qn[qn == 0.0] = 1.0
         cn = np.linalg.norm(C, axis=1, keepdims=True)
         cn[cn == 0.0] = 1.0
-        key = -np.round((Q / qn) @ (C / cn).T, round_decimals)
+        key = -np.round((Q / qn) @ (C / cn).T, PROBE_DECIMALS)
     else:
         raise ValueError(f"probe_rank: unknown metric {metric!r}")
     # stable: equal keys keep row (= cell) order
@@ -75,7 +89,6 @@ def probe_cells_gemm(
     metric: str,
     query_id_col: str = "query_id",
     query_vector_col: str = "query_vector",
-    round_decimals: int = 9,
 ) -> DataFrame:
     """Map-only probe selection: for each query row emit its nprobe
     nearest cells. Output columns: ``__qid`` (input id type), ``__qv``
@@ -126,9 +139,7 @@ def probe_cells_gemm(
             if pdf.empty:
                 continue
             Q = np.asarray(list(pdf[query_vector_col]), dtype=np.float64)
-            order = probe_rank(
-                Q, C, np_take, metric=metric, round_decimals=round_decimals
-            )
+            order = probe_rank(Q, C, np_take, metric=metric)
             qids = pdf[query_id_col].to_numpy()
             yield pd.DataFrame(
                 {
@@ -157,7 +168,7 @@ def probe_cells_expr(
     """The reference twin of ``probe_cells_gemm``: same rule, same
     output columns, as DataFrame expressions — queries × nlist
     centroids (tiny broadcast crossJoin), an interpreted fold per pair,
-    the key rounded to 9 dp BEFORE the (key, cell ASC)
+    the key rounded to ``PROBE_DECIMALS`` BEFORE the (key, cell ASC)
     tie-break (unrounded, two centroids within ~1e-9 could rank
     differently across the twins — ADVICE r6), then a row_number window
     per query. Shuffles Q × nlist rows: the tests' reference, not a
@@ -186,7 +197,7 @@ def probe_cells_expr(
             F.col(query_vector_col).cast("array<double>").alias("__qv"),
         )
         .crossJoin(F.broadcast(cent))
-        .withColumn("__key", F.round(key, 9))
+        .withColumn("__key", F.round(key, PROBE_DECIMALS))
         .withColumn("__pr", F.row_number().over(w))
         .filter(F.col("__pr") <= nprobe)
         .select("__qid", "__qv", "cell")
@@ -375,12 +386,18 @@ class IVFIndex:
         # same NULL-id exclusion as build() — appended unkeyed rows
         # would silently vanish at the search-time rerank joins
         new_df = new_df.filter(F.col(self.id_col).isNotNull())
-        assigned_new = assign_clusters(
-            new_df,
-            self.centroids,
-            vector_col=self.vector_col,
-            cluster_col="cell",
+        return self.union_assigned(
+            assign_clusters(
+                new_df,
+                self.centroids,
+                vector_col=self.vector_col,
+                cluster_col="cell",
+            )
         )
+
+    def union_assigned(self, assigned_new: DataFrame) -> "IVFIndex":
+        """``append`` for rows already assigned to these centroids (the
+        ``IVFPQIndex.append`` path, which encodes the same rows)."""
         merged = self.assigned.unionByName(
             assigned_new.select(*[f.name for f in self.assigned.schema.fields]),
             allowMissingColumns=False,
@@ -393,6 +410,13 @@ class IVFIndex:
         ``cell=…/`` partition directories — the old files are never
         rewritten (dynamic partition APPEND, not overwrite), so the cost
         is O(new batch) regardless of index size."""
+        self.assign_for_saved(new_df).write.mode("append").partitionBy(
+            "cell"
+        ).parquet(os.path.join(path, "cells"))
+
+    def assign_for_saved(self, new_df: DataFrame) -> DataFrame:
+        """The new rows of an ``append_to_saved`` (this index's and
+        ``IVFPQIndex``'s), validated and assigned to cells."""
         from weaviate_txtai_spark.operators.kmeans import assign_clusters
 
         # align to the saved schema BEFORE the write, like append():
@@ -421,16 +445,13 @@ class IVFIndex:
                 "append_to_saved: column types differ from the saved index "
                 f"(column, saved, new): {mismatched} — cast before appending"
             )
-        expected = [f.name for f in expected]
         # same NULL-id exclusion as build/append (r13 join census)
         new_df = new_df.filter(F.col(self.id_col).isNotNull())
-        assign_clusters(
-            new_df.select(*expected),
+        return assign_clusters(
+            new_df.select(*[f.name for f in expected]),
             self.centroids,
             vector_col=self.vector_col,
             cluster_col="cell",
-        ).write.mode("append").partitionBy("cell").parquet(
-            os.path.join(path, "cells")
         )
 
     def save(self, path: str) -> None:
@@ -518,6 +539,7 @@ class IVFIndex:
         enough salts for ~2 tasks per core. Probe rows multiply by the
         salt count (queries × nprobe × S — the small side); the corpus
         still shuffles exactly once."""
+        require_positive("IVFIndex.search", nprobe=nprobe)
         spark = query_df.sparkSession
         # NULL query ids excluded: per-query probe/rank steps key on the
         # id, so unkeyed queries would lump into one merged result list

@@ -26,7 +26,8 @@ nprobe/nlist of the data, and every stage is a DataFrame op:
   oracle/exactness path — same float64 op sequence, equal up to the
   np.round/F.round midpoint caveat on ``pq._adc_scores_gemm``) →
   merged shortlist → optional
-  exact re-rank over the shortlist ids only (query vectors
+  exact re-rank over the shortlist ids only (``topk.exact_rerank``,
+  the re-rank step of every shortlist search; query vectors
   broadcast-joined, never a per-row lookup literal). For a DataFrame
   query side (unbounded Q) use ``search_df``/``topk_join_ivfpq``.
 
@@ -46,14 +47,16 @@ from weaviate_txtai_spark.operators.ann import (
     IVFIndex,
     probe_cells,
     probe_rank,
+    require_positive,
 )
 from weaviate_txtai_spark.operators.pq import (
     PQModel,
+    adc_fold,
     adc_gather,
     pq_encode,
     train_pq,
 )
-from weaviate_txtai_spark.operators.topk import topk_rows
+from weaviate_txtai_spark.operators.topk import exact_rerank, topk_rows
 
 
 @dataclass
@@ -160,30 +163,19 @@ class IVFPQIndex:
         # same NULL-id exclusion as IVFIndex.build/append: keeps the
         # float layout and the codes table symmetric (r13 join census)
         new_df = new_df.filter(F.col(self.id_col).isNotNull())
-        ivf_new = self.ivf.append(new_df)
-        keep = [
-            c for c in self.codes.columns
-            if c not in (self.id_col, "cell", "pq_code")
-        ]
+        # one assignment feeds both layouts
         assigned_new = assign_clusters(
             new_df,
             self.ivf.centroids,
             vector_col=self.vector_col,
             cluster_col="cell",
         )
-        residual_new = _with_residual(
-            assigned_new, self.ivf.centroids, vector_col=self.vector_col
-        )
-        codes_new = pq_encode(
-            residual_new, self.pq, vector_col="__res", packed=False
-        ).select(self.id_col, "cell", "pq_code", *keep)
-        merged = self.codes.unionByName(
-            codes_new.select(self.codes.columns), allowMissingColumns=False
-        )
         return IVFPQIndex(
-            ivf=ivf_new,
+            ivf=self.ivf.union_assigned(assigned_new),
             pq=self.pq,
-            codes=merged,
+            codes=self.codes.unionByName(
+                self._encode(assigned_new), allowMissingColumns=False
+            ),
             id_col=self.id_col,
             vector_col=self.vector_col,
         )
@@ -201,60 +193,29 @@ class IVFPQIndex:
         only blows up at load)."""
         import os
 
-        from weaviate_txtai_spark.operators.kmeans import assign_clusters
-
-        # schema/type validation BEFORE any write (same mixed-footer
-        # hazard as IVFIndex.append_to_saved: parquet append accepts
-        # mismatched footers silently and load() blows up later)
-        expected = [
-            f for f in self.ivf.assigned.schema.fields if f.name != "cell"
-        ]
-        missing = {f.name for f in expected} - set(new_df.columns)
-        if missing:
-            raise ValueError(
-                f"append_to_saved: new rows lack index columns "
-                f"{sorted(missing)}"
-            )
-        new_types = {f.name: f.dataType for f in new_df.schema.fields}
-        mismatched = [
-            (f.name, f.dataType.simpleString(),
-             new_types[f.name].simpleString())
-            for f in expected
-            if new_types[f.name] != f.dataType
-        ]
-        if mismatched:
-            raise ValueError(
-                "append_to_saved: column types differ from the saved "
-                f"index (column, saved, new): {mismatched} — cast before "
-                "appending"
-            )
-        # same NULL-id exclusion as build/append (r13 join census)
-        new_df = new_df.filter(F.col(self.id_col).isNotNull())
-        assigned_new = assign_clusters(
-            new_df.select(*[f.name for f in expected]),
-            self.ivf.centroids,
-            vector_col=self.vector_col,
-            cluster_col="cell",
-        )
+        # validated BEFORE any write (IVFIndex.assign_for_saved)
+        assigned_new = self.ivf.assign_for_saved(new_df)
         (
             assigned_new.write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(path, "vectors"))
         )
-        residual_new = _with_residual(
-            assigned_new, self.ivf.centroids, vector_col=self.vector_col
-        )
-        keep = [
-            c for c in self.codes.columns
-            if c not in (self.id_col, "cell", "pq_code")
-        ]
         (
-            pq_encode(residual_new, self.pq, vector_col="__res", packed=False)
-            .select(self.id_col, "cell", "pq_code", *keep)
+            self._encode(assigned_new)
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(path, "codes"))
         )
+
+    def _encode(self, assigned: DataFrame) -> DataFrame:
+        """Codes-table rows (``self.codes``' columns) of cell-assigned
+        float rows: residuals encoded with the frozen codebooks."""
+        residual = _with_residual(
+            assigned, self.ivf.centroids, vector_col=self.vector_col
+        )
+        return pq_encode(
+            residual, self.pq, vector_col="__res", packed=False
+        ).select(self.codes.columns)
 
     def save(self, path: str) -> None:
         """Persist the index: codes partitioned by cell (the scan side —
@@ -346,8 +307,9 @@ class IVFPQIndex:
         probed cell score that cell's codes against the LUT of the
         query's RESIDUAL in that cell; merge per-query candidates; when
         ``shortlist`` is set, re-rank the ``shortlist×n`` best ADC ids
-        with exact squared L2 on the float corpus (broadcast semi-join —
-        full-precision I/O is O(shortlist·n·Q), never O(corpus)).
+        with exact squared L2 on the float corpus (``topk.exact_rerank``
+        over a broadcast semi-join — full-precision I/O is
+        O(shortlist·n·Q), never O(corpus)).
 
         ``strategy='auto'``/'gemm' (default) scores candidates with a
         shuffle-free Arrow gather kernel — the LUT set rides in the
@@ -370,6 +332,9 @@ class IVFPQIndex:
         """
         import numpy as np
 
+        require_positive(
+            "IVFPQIndex.search", nprobe=nprobe, shortlist=shortlist
+        )
         if not queries:
             raise ValueError("IVFPQIndex.search: empty query batch")
         # a None query id would merge its candidates with every other
@@ -401,21 +366,17 @@ class IVFPQIndex:
             ArrayType,
             DoubleType,
             IntegerType,
+            LongType,
             StructField,
             StructType,
         )
 
         if query_id_type is None:
-            from pyspark.sql.types import LongType
-
-            first = queries[0][0]
-            query_id_type = (
-                LongType() if isinstance(first, int) else None
-            )
-            if query_id_type is None:
+            if not isinstance(queries[0][0], int):
                 raise ValueError(
                     "IVFPQIndex.search: pass query_id_type for non-int ids"
                 )
+            query_id_type = LongType()
         lut_schema = StructType(
             [
                 StructField("__qid", query_id_type),
@@ -441,26 +402,9 @@ class IVFPQIndex:
             # runs interpreted per candidate row — use the gemm path
             # for anything perf-sensitive.
             luts = F.broadcast(spark.createDataFrame(lut_rows, lut_schema))
-            m = self.pq.m
-            dist = F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.lit(list(range(m))).cast("array<int>"),
-                        F.col("pq_code"),
-                        lambda s, c: F.element_at(
-                            F.element_at(F.col("__lut"), s + 1), c + 1
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            )
-            cand = (
-                base.join(luts, "cell")
-                .select(
-                    F.col("__qid"), F.col(self.id_col), dist.alias("adc_dist")
-                )
+            dist = adc_fold(F.col("__lut"), F.col("pq_code"), self.pq.m)
+            cand = base.join(luts, "cell").select(
+                F.col("__qid"), F.col(self.id_col), dist.alias("adc_dist")
             )
         else:
             cand = self._adc_candidates_gemm(base, lut_rows, lut_schema, take)
@@ -478,55 +422,25 @@ class IVFPQIndex:
                 F.col("adc_dist").alias("dist"),
                 "rank",
             )
-        # exact re-rank over the shortlist only. The query vectors come
-        # in via a broadcast-joined DataFrame, NOT a create_map literal:
-        # a Q-entry map literal is probed linearly per row (O(Q) per
-        # shortlist row -> O(Q²·take) total; measured +15 s at Q=500,
-        # sf0.1) and its O(Q·dim) expression tree bloats analysis too.
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(qid, [float(v) for v in qv]) for qid, qv in queries],
-                StructType(
-                    [
-                        StructField("__qid", query_id_type),
-                        StructField("__qv", ArrayType(DoubleType())),
-                    ]
-                ),
-            )
+        # exact re-rank over the shortlist only (``exact_rerank``). The
+        # query vectors come in via a broadcast-joined DataFrame, NOT a
+        # create_map literal: a Q-entry map literal is probed linearly
+        # per row (O(Q) per shortlist row -> O(Q²·take) total; measured
+        # +15 s at Q=500, sf0.1) and its O(Q·dim) expression tree bloats
+        # analysis too.
+        qdf = spark.createDataFrame(
+            [(qid, [float(v) for v in qv]) for qid, qv in queries],
+            f"__qid {query_id_type.simpleString()}, __qv array<double>",
         )
-        shortlist_ids = top.select("__qid", self.id_col)
-        exact = (
-            self.ivf.assigned.join(
-                F.broadcast(shortlist_ids), self.id_col
-            )
-            .join(qdf, "__qid")
-            .select(
-                "__qid",
-                self.id_col,
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col(self.vector_col).cast("array<double>"),
-                            F.col("__qv"),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ),
-                    6,
-                ).alias("dist"),
-            )
-        )
-        w2 = Window.partitionBy("__qid").orderBy(
-            F.asc("dist"), F.asc(self.id_col)
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= n)
-            .select(
-                F.col("__qid").alias("query_id"), self.id_col, "dist", "rank"
-            )
-        )
+        return exact_rerank(
+            F.broadcast(top.select("__qid", self.id_col)),
+            self.ivf.assigned,
+            F.broadcast(qdf),
+            n,
+            metric="l2",
+            id_col=self.id_col,
+            vector_col=self.vector_col,
+        ).withColumnRenamed("__qid", "query_id")
 
     def search_df(
         self,
@@ -554,9 +468,10 @@ class IVFPQIndex:
         only per-group top-``take`` rows — (adc_dist, id) is a strict
         total order, so the global merge window is exact over the
         per-group winners. When ``shortlist`` is set, the merged
-        shortlist re-ranks against the float corpus via two equi-joins
-        and a vectorized Arrow distance kernel (never an interpreted
-        per-pair fold), then cuts to top-n.
+        shortlist re-ranks against the float corpus through
+        ``topk.exact_rerank`` (two equi-joins and one Arrow pass of the
+        fold-order kernel ``exact_dist``, equal bit for bit to the
+        expression fold), then cuts to top-n.
 
         Same salting/AQE-exemption/key-type discipline as
         ``ann.IVFIndex._cogroup_scored`` (cogroup does NOT auto-cast
@@ -566,6 +481,9 @@ class IVFPQIndex:
         import numpy as np
         import pandas as pd
 
+        require_positive(
+            "IVFPQIndex.search_df", nprobe=nprobe, shortlist=shortlist
+        )
         spark = self.codes.sparkSession
         # NULL query ids excluded: per-query LUT/window steps key on the
         # id, so unkeyed queries would lump into one merged result list
@@ -694,54 +612,22 @@ class IVFPQIndex:
                 "rank",
             )
 
-        # ---- exact re-rank: two equi-joins bring each shortlist pair
-        # its float vectors, then one vectorized Arrow pass computes the
-        # exact squared L2 — O(Q·take) pairs, never an interpreted
-        # per-pair fold, never O(corpus) float I/O
-        pairs = (
-            top.select("__qid", id_col)
-            .join(
-                self.ivf.assigned.select(
-                    id_col,
-                    F.col(self.vector_col).cast("array<double>").alias("__dv"),
-                ),
-                id_col,
-            )
-            .join(
-                query_df.select(
-                    F.col(query_id_col).alias("__qid"),
-                    F.col(query_vector_col).cast("array<double>").alias("__qv"),
-                ),
-                "__qid",
-            )
-        )
-
-        def exact(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                dv = np.asarray(list(pdf["__dv"]), dtype=np.float64)
-                qv = np.asarray(list(pdf["__qv"]), dtype=np.float64)
-                dist = np.round(((dv - qv) ** 2).sum(axis=1), 6)
-                yield pd.DataFrame(
-                    {
-                        "__qid": pdf["__qid"],
-                        id_col: pdf[id_col],
-                        "dist": dist,
-                    }
-                )
-
-        exact_df = pairs.mapInPandas(
-            exact, schema=f"__qid {qid_ddl}, {id_col} {id_ddl}, dist double"
-        )
-        w2 = Window.partitionBy("__qid").orderBy(F.asc("dist"), F.asc(id_col))
-        return (
-            exact_df.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= n)
-            .select(
-                F.col("__qid").alias(query_id_col), id_col, "dist", "rank"
-            )
-        )
+        # ---- exact re-rank (``exact_rerank``): two equi-joins bring
+        # each shortlist pair its float vectors, then one Arrow pass
+        # scores them — O(Q·take) pairs, never O(corpus) float I/O. No
+        # broadcast: both the shortlist and the query side are unbounded
+        return exact_rerank(
+            top.select("__qid", id_col),
+            self.ivf.assigned,
+            query_df.select(
+                F.col(query_id_col).alias("__qid"),
+                F.col(query_vector_col).cast("array<double>").alias("__qv"),
+            ),
+            n,
+            metric="l2",
+            id_col=id_col,
+            vector_col=self.vector_col,
+        ).withColumnRenamed("__qid", query_id_col)
 
     def _adc_candidates_gemm(
         self, base: DataFrame, lut_rows: list, lut_schema, take: int
@@ -865,12 +751,9 @@ def tune_shortlist(
     (nprobe governs the COARSE miss rate, shortlist the FINE one: how
     deep the ADC prefix must go before the true top-k is inside it).
 
-    Ground truth is exact brute-force L2 top-k computed DISTRIBUTED
-    (``knn_topk_gemm(metric='l2')`` — one corpus scan, per-partition
-    top-k, only Q·k·partitions rows ever reach the driver; ADVICE r5:
-    the previous full-corpus ``collect()`` broke the bounded-driver-
-    state discipline and would OOM at the scale this module targets).
-    Doubles shortlist 1, 2, 4, … ``max_shortlist``, measuring mean
+    Ground truth is exact brute-force L2 top-k computed distributed
+    (``_recall_measure``; ADVICE r5: a full-corpus ``collect()`` would
+    OOM at the scale this module targets). Doubles shortlist 1, 2, 4, … ``max_shortlist``, measuring mean
     per-query recall@k at the FIXED nprobe, so the curve isolates the
     quantization-induced loss from the probe-induced loss. Returns
     (chosen_shortlist, {shortlist: recall}). Deterministic for the same
@@ -879,47 +762,15 @@ def tune_shortlist(
     100 TB the re-rank's float I/O is shortlist·n·Q rows, so every
     doubling you don't need is real money.
     """
-    from weaviate_txtai_spark.operators.topk import knn_topk_gemm
-
-    if not sample_queries:
-        raise ValueError("tune_shortlist: empty sample_queries")
-    truth: dict = {}
-    truth_rows = knn_topk_gemm(
-        index.ivf.assigned,
-        [(qid, list(qv)) for qid, qv in sample_queries],
-        k,
-        vector_col=index.vector_col,
-        id_col=index.id_col,
-        metric="l2",
-    ).collect()  # ≤ Q·k rows — bounded by the sample size, not the corpus
-    for r in truth_rows:
-        truth.setdefault(r["query_id"], set()).add(r[index.id_col])
-    if not truth:
-        # same guard as tune_search_params: an empty/fully-filtered
-        # corpus yields no ground truth and the recall mean below would
-        # ZeroDivisionError deep in the ladder
-        raise ValueError("tune_shortlist: no ground truth — empty corpus")
-
+    measure = _recall_measure(index, sample_queries, k, "tune_shortlist")
     curve: dict[int, float] = {}
     shortlist = 1
-    chosen = max_shortlist
     while True:
         shortlist = min(shortlist, max_shortlist)
-        got: dict = {}
-        res = index.search(
-            sample_queries, k, nprobe=nprobe, shortlist=shortlist
-        )
-        for r in res.collect():
-            got.setdefault(r["query_id"], set()).add(r[index.id_col])
-        recalls = [
-            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
-        ]
-        curve[shortlist] = sum(recalls) / len(recalls)
+        curve[shortlist] = measure(nprobe, shortlist)
         if curve[shortlist] >= recall_target or shortlist == max_shortlist:
-            chosen = shortlist
-            break
+            return shortlist, curve
         shortlist *= 2
-    return chosen, curve
 
 
 def tune_search_params(
@@ -945,9 +796,8 @@ def tune_search_params(
     costs O(log(nlist)·log(max_shortlist)) measured searches on the
     sample.
 
-    Ground truth is computed once, distributed (same
-    ``knn_topk_gemm(metric='l2')`` path as tune_shortlist — bounded
-    driver state). Returns (nprobe, shortlist, curve) where curve maps
+    Ground truth is computed once, distributed (``_recall_measure``,
+    as in tune_shortlist). Returns (nprobe, shortlist, curve) where curve maps
     every measured (nprobe, shortlist) → mean recall@k; the curve is
     the audit artifact: minimality means no measured predecessor on
     either axis meets the target. If even (nlist, max_shortlist)
@@ -955,34 +805,9 @@ def tune_search_params(
     see the shortfall in the curve rather than get an exception
     mid-pipeline.
     """
-    from weaviate_txtai_spark.operators.topk import knn_topk_gemm
-
-    if not sample_queries:
-        raise ValueError("tune_search_params: empty sample_queries")
-    truth: dict = {}
-    for r in knn_topk_gemm(
-        index.ivf.assigned,
-        [(qid, list(qv)) for qid, qv in sample_queries],
-        k,
-        vector_col=index.vector_col,
-        id_col=index.id_col,
-        metric="l2",
-    ).collect():
-        truth.setdefault(r["query_id"], set()).add(r[index.id_col])
-    if not truth:
-        raise ValueError("tune_search_params: no ground truth — empty corpus")
-
-    def measure(nprobe: int, shortlist: int) -> float:
-        got: dict = {}
-        res = index.search(
-            sample_queries, k, nprobe=nprobe, shortlist=shortlist
-        )
-        for r in res.collect():
-            got.setdefault(r["query_id"], set()).add(r[index.id_col])
-        return sum(
-            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
-        ) / len(truth)
-
+    measure = _recall_measure(
+        index, sample_queries, k, "tune_search_params"
+    )
     nlist = len(index.ivf.centroids)
     curve: dict[tuple[int, int], float] = {}
     nprobe = 1
@@ -1010,3 +835,48 @@ def tune_search_params(
                 shortlist *= 2
             return nprobe, max_shortlist, curve
         nprobe *= 2
+
+
+def _recall_measure(index: IVFPQIndex, sample_queries: list, k: int, caller: str):
+    """The recall measurement both tuners share: exact L2 truth
+    computed once, DISTRIBUTED (``knn_topk_gemm(metric='l2')`` — one
+    corpus scan, only Q·k·partitions rows reach the driver), and a
+    function (nprobe, shortlist) → mean per-query recall@k of
+    ``index.search`` on the sample."""
+    from weaviate_txtai_spark.operators.topk import knn_topk_gemm
+
+    if not sample_queries:
+        raise ValueError(f"{caller}: empty sample_queries")
+
+    def ids_by_query(rows) -> dict:
+        out: dict = {}
+        for r in rows:
+            out.setdefault(r["query_id"], set()).add(r[index.id_col])
+        return out
+
+    truth = ids_by_query(
+        knn_topk_gemm(
+            index.ivf.assigned,
+            [(qid, list(qv)) for qid, qv in sample_queries],
+            k,
+            vector_col=index.vector_col,
+            id_col=index.id_col,
+            metric="l2",
+        ).collect()
+    )
+    if not truth:
+        # an empty/fully-filtered corpus yields no ground truth and the
+        # recall mean would ZeroDivisionError deep in the ladder
+        raise ValueError(f"{caller}: no ground truth — empty corpus")
+
+    def measure(nprobe: int, shortlist: int) -> float:
+        got = ids_by_query(
+            index.search(
+                sample_queries, k, nprobe=nprobe, shortlist=shortlist
+            ).collect()
+        )
+        return sum(
+            len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
+        ) / len(truth)
+
+    return measure

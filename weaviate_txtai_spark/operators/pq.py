@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from weaviate_txtai_spark.operators.kmeans import assign_clusters
-from weaviate_txtai_spark.operators.topk import topk_rows
+from weaviate_txtai_spark.operators.topk import exact_rerank, topk_rows
 
 
 @dataclass
@@ -405,16 +405,29 @@ def adc_scores(
     lut_lit = F.array(
         *[F.array(*[F.lit(v) for v in row]) for row in lut]
     )
-    dist = F.aggregate(
-        F.zip_with(
-            F.lit([i for i in range(model.m)]).cast("array<int>"),
-            F.col(code_col),
-            lambda s, c: F.element_at(F.element_at(lut_lit, s + 1), c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return codes.withColumn(
+        dist_col, adc_fold(lut_lit, F.col(code_col), model.m)
     )
-    return codes.withColumn(dist_col, F.round(dist, 6))
+
+
+def adc_fold(lut: Column, code: Column, m: int) -> Column:
+    """Round-6 ADC distance as an expression: ``lut[s][code[s]]``
+    accumulated from 0.0 over s = 0..m-1, left to right — the oracle
+    twin of :func:`adc_gather`, shared by :func:`adc_scores` (a LUT
+    literal) and ``IVFPQIndex.search``'s 'expr' strategy (a per-cell
+    LUT column)."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(
+                F.lit(list(range(m))).cast("array<int>"),
+                code,
+                lambda s, c: F.element_at(F.element_at(lut, s + 1), c + 1),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ),
+        6,
+    )
 
 
 def pq_unpack(
@@ -438,7 +451,8 @@ def adc_gather(lut, codes):
     the same float64 operation sequence as :func:`adc_scores`'
     ``aggregate`` fold, shared by every Arrow ADC kernel. Keep the
     loop: a vectorized ``.sum(axis=1)`` changes the summation order and
-    can flip 6-dp ties against the oracle. ``lut``: m per-subspace
+    can flip 6-dp ties against the oracle (``topk.exact_dist``, the
+    exact re-rank kernel, keeps the same rule). ``lut``: m per-subspace
     tables of k entries; ``codes``: (rows, m) int codes."""
     import numpy as np
 
@@ -559,7 +573,8 @@ def adc_topk_rerank(
     ``shortlist×n`` ADC candidate set; only those rows' float vectors
     are then read (broadcast semi-join on the tiny id set — at scale
     this is the point: the full-precision read is O(shortlist·n), not
-    O(corpus)) and re-scored with exact squared L2.
+    O(corpus)) and re-scored with exact squared L2 by the shared
+    re-rank step ``topk.exact_rerank``.
 
     Shortlist sizing is the recall knob: ADC's rank correlation with
     the exact distance is high but not 1 (quantization noise), so the
@@ -571,27 +586,11 @@ def adc_topk_rerank(
     q = [float(v) for v in query]
     cand = adc_topk(
         codes, model, q, shortlist * n, id_col=id_col, code_col=code_col
-    ).select(id_col)
-    lit = F.array(*[F.lit(v) for v in q])
-    exact = (
-        vectors.join(F.broadcast(cand), id_col)
-        .select(
-            id_col,
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vector_col).cast("array<double>"),
-                        lit,
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("dist"),
-        )
-        .orderBy(F.asc("dist"), F.asc(id_col))
-        .limit(n)
+    ).select(F.lit(0).alias("__qid"), id_col)
+    qdf = vectors.sparkSession.createDataFrame(
+        [(0, q)], "__qid int, __qv array<double>"
     )
-    w = Window.orderBy(F.asc("dist"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(w))
+    return exact_rerank(
+        F.broadcast(cand), vectors, F.broadcast(qdf), n,
+        metric="l2", id_col=id_col, vector_col=vector_col,
+    ).drop("__qid")

@@ -24,6 +24,10 @@ Physical strategy (designed for 100 TB / 1000 executors):
 - ``topk_rows`` is the one tie-exact top-k step every Arrow scorer shares
   (``knn_topk_gemm``, the IVF cogroup, the PQ/IVF-PQ ADC kernels): one
   vectorized cut per block, exact under ties at the k-th key.
+- ``exact_rerank`` is the one exact re-rank of every shortlist search
+  (PQ, OPQ, IVF-PQ, the binary tier): shortlist pairs joined to their
+  float vectors, scored block-at-a-time by ``exact_dist`` in one Arrow
+  pass, rounded to 6 dp and cut per query.
 """
 
 from __future__ import annotations
@@ -105,6 +109,88 @@ def topk_rows(key: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     else:
         cand = np.arange(len(key))
     return cand[np.lexsort((ids[cand], key[cand]))[:t]]
+
+
+def exact_dist(X: np.ndarray, Q: np.ndarray, metric: str) -> np.ndarray:
+    """Exact score of each row pair ``(X[i], Q[i])`` (both (pairs, dim)
+    float64): squared L2 for ``metric='l2'``, cosine similarity for
+    ``'cosine'`` (0 when either vector has norm 0).
+
+    Every sum runs over the dimensions left to right from 0.0 — the
+    float64 operation sequence of the canonical expressions (the
+    squared-L2 ``aggregate`` fold and ``functions.vector.cosine_sim``),
+    so the result equals them bit for bit. Keep the loop: a vectorized
+    ``.sum(axis=1)`` sums pairwise and differs in the last bits (the
+    same rule as ``pq.adc_gather``)."""
+    if metric == "l2":
+        acc = np.zeros(len(X))
+        for j in range(X.shape[1]):
+            d = X[:, j] - Q[:, j]
+            acc = acc + d * d
+        return acc
+    if metric != "cosine":
+        raise ValueError(f"exact_dist: unknown metric {metric!r}")
+    xq, xx, qq = np.zeros(len(X)), np.zeros(len(X)), np.zeros(len(X))
+    for j in range(X.shape[1]):
+        x, q = X[:, j], Q[:, j]
+        xq, xx, qq = xq + x * q, xx + x * x, qq + q * q
+    denom = np.sqrt(xx) * np.sqrt(qq)
+    return np.divide(xq, denom, out=np.zeros(len(X)), where=denom != 0.0)
+
+
+def exact_rerank(
+    pairs: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    n: int,
+    *,
+    metric: str,
+    id_col: str,
+    vector_col: str,
+) -> DataFrame:
+    """The exact re-rank step of every shortlist search: ``pairs``
+    (``__qid``, ``id_col``) joined to their float ``vectors`` and to
+    ``queries`` (``__qid``, ``__qv`` array<double>), scored by
+    :func:`exact_dist` in one ``mapInPandas`` pass, rounded to 6 dp,
+    ranked per ``__qid`` by (dist ASC | score DESC, id ASC), cut to
+    ``n``. ``metric``: 'l2' (column ``dist``, squared L2 — the PQ
+    family) or 'cosine' (``score`` — the binary tier). Callers pass
+    bounded sides in ``F.broadcast``; single-query callers use
+    ``__qid = 0`` and drop it. Output: ``__qid, id_col, dist|score,
+    rank``."""
+    out = {"l2": "dist", "cosine": "score"}.get(metric)
+    if out is None:
+        raise ValueError(f"exact_rerank: unknown metric {metric!r}")
+    qid_ddl = pairs.schema["__qid"].dataType.simpleString()
+    id_ddl = vectors.schema[id_col].dataType.simpleString()
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            dist = exact_dist(
+                np.asarray(list(pdf["__dv"]), dtype=np.float64),
+                np.asarray(list(pdf["__qv"]), dtype=np.float64),
+                metric,
+            )
+            yield pd.DataFrame(
+                {"__qid": pdf["__qid"], id_col: pdf[id_col], out: dist}
+            )
+
+    order = F.asc(out) if metric == "l2" else F.desc(out)
+    w = Window.partitionBy("__qid").orderBy(order, F.asc(id_col))
+    return (
+        vectors.select(
+            id_col, F.col(vector_col).cast("array<double>").alias("__dv")
+        )
+        .join(pairs, id_col)
+        .join(queries, "__qid")
+        .select("__qid", id_col, "__dv", "__qv")
+        .mapInPandas(score, f"__qid {qid_ddl}, {id_col} {id_ddl}, {out} double")
+        .withColumn(out, F.round(out, 6))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+    )
 
 
 def _infer_query_id_type(qids):
@@ -331,23 +417,18 @@ def hamming_topk_rerank(
 ) -> DataFrame:
     """Production composition for the binary tier: Hamming shortlist
     over the 1-bit codes (the only corpus-wide scan — 256× less I/O
-    than float32), then exact cosine re-rank of the ``shortlist×n``
-    survivors' float vectors (broadcast semi-join on the tiny id set).
-    Same shape as ``pq.adc_topk_rerank``; exact when the shortlist
-    covers the corpus regardless of how lossy the sign codes are.
-    Output: id, score (cosine, descending), rank."""
+    than float32), then the exact cosine re-rank (``exact_rerank``) of
+    the ``shortlist×n`` survivors' float vectors (broadcast semi-join
+    on the tiny id set). Same shape as ``pq.adc_topk_rerank``; exact
+    when the shortlist covers the corpus regardless of how lossy the
+    sign codes are. Output: id, score (cosine, descending), rank."""
     cand = hamming_topk(
         codes, query_code, shortlist * n, id_col=id_col, code_col=code_col
-    ).select(id_col)
-    qlit = F.array(*[F.lit(float(v)) for v in query])
-    exact = (
-        vectors.join(F.broadcast(cand), id_col)
-        .select(
-            id_col,
-            F.round(cosine_sim(F.col(vector_col), qlit), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(n)
+    ).select(F.lit(0).alias("__qid"), id_col)
+    qdf = vectors.sparkSession.createDataFrame(
+        [(0, [float(v) for v in query])], "__qid int, __qv array<double>"
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(w))
+    return exact_rerank(
+        F.broadcast(cand), vectors, F.broadcast(qdf), n,
+        metric="cosine", id_col=id_col, vector_col=vector_col,
+    ).drop("__qid")

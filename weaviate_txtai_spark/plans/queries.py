@@ -70,12 +70,11 @@ _PRIORITY = [
     "similarity_brute",
     "similar_sql",
     "agg_stats_txtai",
-    # the 18 r13-optimizer-rewritten gates the driver has not re-sampled
-    # since (VERDICT r13 "what's wrong" §3), all additionally touched by
-    # the r14 eager-materialization wave
+    # 15 of the 18 r13-optimizer-rewritten gates (VERDICT r13 "what's
+    # wrong" §3), all additionally touched by the r14
+    # eager-materialization wave
     "docs_unigram_nll",
     "docs_bigram_nll",
-    "docs_trigram_jm_nll",
     "lineitem_spearman",
     "dedup_ngram_jaccard",
     "tfidf_top_terms",
@@ -88,8 +87,6 @@ _PRIORITY = [
     "retrieval_eval",
     "docs_heaps_law",
     "docs_quality_classifier",
-    "events_range_join",
-    "customer_supplier_hits",
     "order_chain_components",
     # r14-changed gates beyond that set: the graph local-finish probe +
     # Tarjan kernel (order_scc, CC consumers), the eager shared-frame
@@ -109,15 +106,19 @@ _PRIORITY = [
     "basket_rules",
     "source_shard_apportion",
     # the Arrow scorers that share one tie-exact top-k step
-    # (topk.topk_rows) and one ADC gather (pq.adc_gather), and the
-    # cardinality guards that probe before they fill the cache
+    # (topk.topk_rows) and one ADC gather (pq.adc_gather)
     "knn_batch_gemm",
     "pq_knn",
-    "ivfpq_knn",
     "sim_join_ivf",
+    # every shortlist search, scored by the one exact re-rank
+    # (topk.exact_rerank), and the single-assignment IVF-PQ append
+    "ivfpq_knn",
     "sim_join_ivfpq",
-    "purchase_isotonic_fit",
-    "lineitem_kendall_tau",
+    "pq_knn_rerank",
+    "binary_hamming_rerank",
+    "opq_knn_rerank",
+    "ivfopq_knn",
+    "ivfpq_append_search",
 ]
 
 

@@ -1189,10 +1189,10 @@ def opq_knn_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     of PQ (Ge et al. 2013) — trained end-to-end here (2 alternations,
     real Procrustes updates), then gated the same way as pq_knn_rerank:
     a corpus-covering ADC shortlist makes the rotated codes a pure
-    candidate proposer and the exact re-rank must equal brute-force L2
-    top-10 REGARDLESS of the learned rotation (orthogonal R preserves
-    L2, so searching rotated codes targets the original-space
-    distance). Rotation orthogonality, error monotonicity on
+    candidate proposer and the exact re-rank (``topk.exact_rerank``)
+    must equal brute-force L2 top-10 REGARDLESS of the learned rotation
+    (orthogonal R preserves L2, so searching rotated codes targets the
+    original-space distance). Rotation orthogonality, error monotonicity on
     anisotropic data, and the iters=0 ≡ plain-PQ twin are pinned in
     tests/test_opq.py."""
     from weaviate_txtai_spark.operators.opq import (
@@ -1200,6 +1200,7 @@ def opq_knn_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         opq_topk,
         train_opq,
     )
+    from weaviate_txtai_spark.operators.topk import exact_rerank
 
     emb = _emb(spark, sf_dir)
     n_corpus = emb.count()
@@ -1210,30 +1211,14 @@ def opq_knn_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "pq_code")
     q = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
     shortlist = -(-n_corpus // 10) * 10
-    cand = opq_topk(codes, model, q, shortlist).select("vec_id")
-    lit = F.array(*[F.lit(float(v)) for v in q])
-    exact = (
-        emb.join(F.broadcast(cand), "vec_id")
-        .select(
-            "vec_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding").cast("array<double>"),
-                        lit,
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("dist"),
-        )
-        .orderBy(F.asc("dist"), F.asc("vec_id"))
-        .limit(10)
+    cand = opq_topk(codes, model, q, shortlist).select(
+        F.lit(0).alias("__qid"), "vec_id"
     )
-    w = Window.orderBy(F.asc("dist"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w))
+    qdf = spark.createDataFrame([(0, q)], "__qid int, __qv array<double>")
+    return exact_rerank(
+        F.broadcast(cand), emb, F.broadcast(qdf), 10,
+        metric="l2", id_col="vec_id", vector_col="embedding",
+    ).drop("__qid")
 
 
 @register("ivfopq_knn", _IVFPQ_KNN_SQL)
